@@ -1,33 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.ext.GraftExtensions)
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // always use the sort-based shuffle writer, never bypass-merge
-      // (r11, guide §2.2): bypass-merge opens one file PER REDUCER per
-      // map task and NIO-merges them — at local[32] that is 32×32 file
-      // creates + mmap/munmap copies + a serialized commit per shuffle,
-      // measured as task time 7× CPU time (threads blocked in
-      // FileOutputStream.open0 / FileChannelImpl.map0 / the metadata
-      // commit lock) across the whole suite. Production shuffles have
-      // R > 200 where bypass never engages, so this also makes local
-      // runs exercise the at-scale writer path. Env-overridable.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "1"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // tz-naive driver parquet reads as an instant, not TIMESTAMP_NTZ
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
     // deterministic run order; SPARK_GRAFT_ONLY=q03,q14 restricts (debug)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)

@@ -3582,18 +3582,10 @@ object SparkEntry {
       drainToTable(s,
         TextAnalysis.gopherRules(docsStreamBalanced(s, dir), "doc_id", "text",
             minStopHits = 1)
-          // spark_partition_id() is nondeterministic and ≥ 0 always: it
-          // pins the filter ABOVE the gate projection and the balancing
-          // exchange. A bare filter(pass) was pushed below both —
-          // PushDownPredicates substituted the whole rule chain into a
-          // Filter under the repartition, so the regex battery ran TWICE
-          // and once on the stream's single input partition (r11,
-          // profiled: 2.1 s single-task map stage + 12 s of duplicate
-          // 32-way evaluation). The guard must WRAP the predicate (a
-          // `pass && guard` conjunction is split and the deterministic
-          // half pushed alone).
-          .filter(when(spark_partition_id() >= 0, col("pass"))
-            .otherwise(lit(false))),
+          // a bare filter(pass) is pushed below the balancing exchange
+          // with the whole rule chain substituted in: the regex battery
+          // ran twice, once on the stream's single input partition
+          .filter(Sources.noPushdown(col("pass"))),
         "g239_gate", "append")
         .orderBy("doc_id")
     },
@@ -5045,11 +5037,9 @@ object SparkEntry {
       // one ~2 s)
       def banded(df: DataFrame) = df
         .select(col("doc_id"), TextAnalysis.words(col("text")).as("toks"))
-        // wrapped nondeterministic guard: a bare size filter is pushed
-        // below the balancing exchange with the tokenize chain
-        // substituted in (the q239 trap) — see q239
-        .filter(when(spark_partition_id() >= 0, size(col("toks")) >= 3)
-          .otherwise(lit(false)))
+        // a bare size filter is pushed below the balancing exchange
+        // with the tokenize chain substituted in (the q239 trap)
+        .filter(Sources.noPushdown(size(col("toks")) >= 3))
         .select(col("doc_id"),
           Dedup.shingleHashes(Dedup.shingles(col("toks"), 3)).as("hs"))
         .select(col("doc_id"), Dedup.minhashFromHashes(col("hs")).as("sig"))
@@ -5150,9 +5140,7 @@ object SparkEntry {
           expr("timestamp'2024-01-01 00:00:00' + doc_id * INTERVAL 1 MINUTE"))
         .select(col("doc_id"), col("ts"),
           TextAnalysis.words(col("text")).as("toks"))
-        // wrapped guard against filter pushdown — see q239
-        .filter(when(spark_partition_id() >= 0, size(col("toks")) >= 3)
-          .otherwise(lit(false)))
+        .filter(Sources.noPushdown(size(col("toks")) >= 3))
         .select(col("doc_id"), col("ts"),
           Dedup.shingleHashes(Dedup.shingles(col("toks"), 3)).as("hs"))
         .select(col("doc_id"), col("ts"),

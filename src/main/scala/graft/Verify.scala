@@ -1,33 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.ext.GraftExtensions)
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // sort-based shuffle writer, never bypass-merge — see Bench.scala
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "1"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS); Spark reads it as long
-      // (Sources.table converts back to a microsecond timestamp).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // driver parquet is written tz-naive (isAdjustedToUTC=false); read
-      // it as an instant (session tz = UTC), not TIMESTAMP_NTZ — NTZ
-      // breaks streaming watermarks and diverges from the DuckDB oracle's
-      // naive-as-UTC comparison semantics
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q72,q73 restricts to matching queries (debug aid;
     // the driver never sets it, so its runs always dump everything)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** S1 / S2 — sources (SURVEY.md §2.1).
@@ -35,9 +35,24 @@ object Sources {
     else df
   }
 
+  /** The one optimizer barrier: `filter(noPushdown(p))` stays where it is
+    * written. PushDownPredicates moves a deterministic filter below the
+    * projections and repartitions under it, substituting every projected
+    * expression it reads — a filter on a costly derived column (a regex
+    * rule battery, a tokenizer) then evaluates that chain a second time,
+    * below the balancing exchange, on the scan's few input partitions
+    * (q239 measured a 2.1 s single-task stage plus 12 s of duplicate
+    * work). A nondeterministic predicate is never pushed, and
+    * `spark_partition_id() >= 0` always holds, so the wrapper changes
+    * where the predicate runs, not its value. It must WRAP the predicate:
+    * a bare `p && guard` conjunction is split and `p` pushed alone.
+    * PlanShapeSpec locks this against Spark upgrades. */
+  def noPushdown(pred: Column): Column =
+    when(spark_partition_id() >= 0, pred).otherwise(lit(false))
+
   /** S1: canonical structured scan. The `events` table carries a
     * TIMESTAMP(NANOS) parquet column which Spark only reads as long (via
-    * spark.sql.legacy.parquet.nanosAsLong, set in Verify/Bench sessions);
+    * spark.sql.legacy.parquet.nanosAsLong, set by [[graft.GraftSession]]);
     * normalize it back to a microsecond TimestampType here so downstream
     * operators always see a timestamp. `balance=true` routes the scan
     * through [[balanced]] — use for CPU-heavy downstream pipelines. */

@@ -121,12 +121,6 @@ object TextAnalysis {
       regexp_count(c, lit("[^\\w\\s]")).cast("double") /
         length(c).cast("double"))
 
-  /** Digit chars per text char (0.0 for empty text). */
-  def digitRatio(c: Column): Column =
-    when(length(c) === 0, lit(0.0)).otherwise(
-      regexp_count(c, lit("[0-9]")).cast("double") /
-        length(c).cast("double"))
-
   /** Composite document quality score in [~-0.25, 1]: rewards stopword
     * density (fluent prose) and length, penalizes punctuation soup. The
     * exact formula is mirrored in the DuckDB oracle; the *shape* (cheap

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, Expression, SortOrder}
 import org.apache.spark.sql.graftbridge.Bridge
 
-import graft.plans.{GraftStrategies, TopKPerKeyNode}
+import graft.plans.TopKPerKeyNode
 
 /** Sort-free top-k per key — the DataFrame face of the custom
   * [[graft.plans.TopKPerKeyNode]] operator (see its scaladoc for why this
@@ -23,18 +23,14 @@ object TopK {
     * a partition degrades gracefully to external sort-based top-k with
     * bounded memory — see [[graft.plans.TopKPerKeyExec]].
     *
-    * Self-registers the planner strategy on the frame's session (a
-    * session-local, idempotent append), so the operator also works on
-    * sessions built without [[graft.ext.GraftExtensions]]. */
+    * Plans only on sessions built with [[graft.ext.GraftExtensions]],
+    * which inject the operator's planner strategy. */
   def perKey(
       df: DataFrame,
       keys: Seq[String],
       order: Seq[(String, Boolean)],
       k: Int): DataFrame = {
     val ss = df.sparkSession
-    if (!ss.experimental.extraStrategies.exists(_.isInstanceOf[GraftStrategies]))
-      ss.experimental.extraStrategies =
-        ss.experimental.extraStrategies :+ new GraftStrategies
     val analyzed = df.queryExecution.analyzed
     def attr(n: String): Expression = analyzed.output.find(_.name == n)
       .getOrElse(throw new IllegalArgumentException(

@@ -126,21 +126,6 @@ object Url {
       .otherwise(last2)
   }
 
-  /** Per-registered-domain corpus scorecard: pages, distinct canonical
-    * URLs (exact-URL dup pressure), and corpus share. One hash-aggregate
-    * keyed by domain; the two-phase distinct carries (domain, canon)
-    * pairs at worst. */
-  def domainScorecard(df: DataFrame, urlCol: String): DataFrame = {
-    val canon = canonicalize(col(urlCol))
-    df.filter(canon.isNotNull)
-      .select(canon.as("canon"), registeredDomain(host(col(urlCol))).as("domain"))
-      .groupBy("domain")
-      .agg(count(lit(1)).as("pages"),
-        countDistinct(col("canon")).as("distinct_urls"))
-      .withColumn("dup_ratio",
-        round(lit(1.0) - col("distinct_urls").cast("double") / col("pages"), 6))
-  }
-
   /** Corpus concentration over registered domains — the diversity
     * headline a web-corpus datasheet reports: HHI (Herfindahl–Hirschman,
     * Σ share²), top-domain share, and the Gini coefficient of the

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Writes one `<query>.txt` per requested query containing the
@@ -20,18 +19,7 @@ object ExplainQueries {
     Files.createDirectories(outDir)
     val wanted = args(1).split(",").toSet
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.ext.GraftExtensions)
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.fromEnv()
     graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => wanted.exists(n.startsWith) }
       .foreach { case (name, fn) =>

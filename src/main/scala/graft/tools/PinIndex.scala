@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Regenerates [[graft.fixtures.PinnedIndex]]: trains the deterministic
@@ -24,14 +23,7 @@ import org.apache.spark.sql.functions._
 object PinIndex {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.fromEnv()
     val corpus = graft.ops.Sources.table(spark, sfDir, "embeddings")
       .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
     val cents = graft.ops.Similarity.trainIvfLloyd(corpus, nCells = 16)

@@ -3,15 +3,14 @@ package graft.tools
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Scratch per-stage profile of one registry query (guide §1/§7): runs the
-  * query with the Bench session shape (local[$SPARK_GRAFT_CPUS], shuffle
-  * partitions = cpus, warmup at sf0.01, noop sink) and prints, for the
-  * timed run, one row per stage — wall time, task count, summed task time,
-  * GC time, shuffle fetch-wait / bytes — plus job-count and driver-gap
-  * totals. Answers "where does the time go at 32 cores" empirically
-  * instead of by plan inspection. Not part of the library surface.
+  * query in the Bench session ([[graft.GraftSession]], warmup at sf0.01,
+  * noop sink) and prints, for the timed run, one row per stage — wall
+  * time, task count, summed task time, GC time, shuffle fetch-wait /
+  * bytes — plus job-count and driver-gap totals. Answers "where does the
+  * time go at N cores" empirically instead of by plan inspection. Not
+  * part of the library surface.
   *
   * Usage: runMain graft.tools.ProfileStages <query> [sfDir] [runs]
   */
@@ -32,29 +31,8 @@ object ProfileStages {
     val qname = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // experiment hook: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2"
-    val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(";")).map(_.split("=", 2)).collect {
-        case Array(k, v) => (k, v)
-      }
-    val spark = extra.foldLeft(SparkSession.builder()) {
-      case (b, (k, v)) => b.config(k, v)
-    }
-      .withExtensions(new graft.ext.GraftExtensions)
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // match the Bench session's shuffle-writer posture
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "1"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.fromEnv()
+    val cpus = spark.sparkContext.defaultParallelism
 
     val stages = new ConcurrentLinkedQueue[StageRow]()
     @volatile var jobs = 0

@@ -101,14 +101,7 @@ object RecallCurve {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val clustered = args.contains("clustered")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.fromEnv()
     if (clustered) {
       // spread 0.25 ≈ tight topical clusters, 0.5 ≈ overlapping topics,
       // 1.0 ≈ clusters as wide as the center spread (≈ uniform limit)

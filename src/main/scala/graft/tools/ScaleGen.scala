@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-trend dataset builder: replicates an existing sf directory `k`
@@ -33,15 +33,7 @@ object ScaleGen {
     val src = args(0)
     val out = args(1)
     val k = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.fromEnv()
 
     def replicate(name: String, shiftCols: Seq[String],
         transform: (DataFrame, Int) => DataFrame = (d, _) => d): Unit = {

@@ -52,6 +52,31 @@ class PlanShapeSpec extends SparkSpec {
       s"column pruning failed: ${scan.schema.fieldNames.mkString(",")}")
   }
 
+  test("noPushdown: a wrapped filter stays above the exchange; a bare one is pushed below") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.functions.col
+    // the q239/q336/q340 shape: a filter on a column derived after a
+    // balancing exchange
+    def plan(pred: Column => Column): SparkPlan = executed(spark.range(0, 1000)
+      .repartition(4, col("id"))
+      .select(col("id"), (col("id") * 7 % 13).as("x"))
+      .filter(pred(col("x") > 3)))
+    def filtersBelowExchange(p: SparkPlan): Seq[FilterExec] =
+      collectAll(p) { case s: ShuffleExchangeExec => s }
+        .flatMap(_.collect { case f: FilterExec => f })
+    // control: without the barrier Spark pushes the filter down, with
+    // the projection substituted in
+    val bare = plan(identity)
+    assert(filtersBelowExchange(bare).nonEmpty,
+      s"the bare filter is no longer pushed down; the control is stale:\n$bare")
+    val held = plan(ops.Sources.noPushdown)
+    assert(filtersBelowExchange(held).isEmpty,
+      s"the wrapped predicate was pushed below the exchange:\n$held")
+    assert(collectAll(held) { case f: FilterExec => f }.size == 1,
+      s"expected the one filter above the exchange:\n$held")
+  }
+
   test("similarity top-k: query side broadcasts (corpus never shuffles for the join)") {
     import org.apache.spark.sql.functions.col
     val e = ops.Sources.table(spark, dir, "embeddings")
@@ -702,45 +727,34 @@ class PlanShapeSpec extends SparkSpec {
   test("rank-filter rewrite: the naive window idiom plans into TopKPerKeyExec; rank consumers don't") {
     import org.apache.spark.sql.functions.{col, row_number}
     import org.apache.spark.sql.expressions.{Window => W}
-    // register the optimizer rule + strategy the way GraftExtensions
-    // would; restore after so other plan locks see the stock optimizer
-    val savedOpt = spark.experimental.extraOptimizations
-    val savedStrat = spark.experimental.extraStrategies
-    spark.experimental.extraOptimizations =
-      savedOpt :+ plans.RewriteRankFilterToTopK
-    if (!savedStrat.exists(_.isInstanceOf[plans.GraftStrategies]))
-      spark.experimental.extraStrategies = savedStrat :+ new plans.GraftStrategies
-    try {
-      val w = W.partitionBy("o_custkey")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      val naive = ops.Sources.table(spark, dir, "orders")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
-        .drop("rn")
-        .select("o_custkey", "o_orderkey", "o_totalprice")
-      val plan = executed(naive)
-      assert(collectAll(plan) { case t: plans.TopKPerKeyExec => t }.nonEmpty,
-        s"naive rank idiom should plan into TopKPerKeyExec:\n$plan")
-      assert(collectAll(plan) {
-        case we: org.apache.spark.sql.execution.window.WindowExec => we
-      }.isEmpty, s"the rank window should be gone:\n$plan")
-      // identical rows to the explicit API path
-      val viaApi = ops.TopK.perKey(ops.Sources.table(spark, dir, "orders"),
-          Seq("o_custkey"), Seq("o_totalprice" -> false, "o_orderkey" -> true), 3)
-        .select("o_custkey", "o_orderkey", "o_totalprice")
-      assert(naive.exceptAll(viaApi).isEmpty && viaApi.exceptAll(naive).isEmpty)
+    // the suite's session loads GraftExtensions: its optimizer rule
+    // rewrites the idiom and its strategy plans the heap operator
+    val w = W.partitionBy("o_custkey")
+      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
+    val naive = ops.Sources.table(spark, dir, "orders")
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= 3)
+      .drop("rn")
+      .select("o_custkey", "o_orderkey", "o_totalprice")
+    val plan = executed(naive)
+    assert(collectAll(plan) { case t: plans.TopKPerKeyExec => t }.nonEmpty,
+      s"naive rank idiom should plan into TopKPerKeyExec:\n$plan")
+    assert(collectAll(plan) {
+      case we: org.apache.spark.sql.execution.window.WindowExec => we
+    }.isEmpty, s"the rank window should be gone:\n$plan")
+    // identical rows to the explicit API path
+    val viaApi = ops.TopK.perKey(ops.Sources.table(spark, dir, "orders"),
+        Seq("o_custkey"), Seq("o_totalprice" -> false, "o_orderkey" -> true), 3)
+      .select("o_custkey", "o_orderkey", "o_totalprice")
+    assert(naive.exceptAll(viaApi).isEmpty && viaApi.exceptAll(naive).isEmpty)
 
-      // a query that KEEPS the rank column must not rewrite
-      val keepsRank = ops.Sources.table(spark, dir, "orders")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
-      val kept = executed(keepsRank)
-      assert(collectAll(kept) { case t: plans.TopKPerKeyExec => t }.isEmpty,
-        s"rank consumer must keep the window:\n$kept")
-    } finally {
-      spark.experimental.extraOptimizations = savedOpt
-      spark.experimental.extraStrategies = savedStrat
-    }
+    // a query that KEEPS the rank column must not rewrite
+    val keepsRank = ops.Sources.table(spark, dir, "orders")
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= 3)
+    val kept = executed(keepsRank)
+    assert(collectAll(kept) { case t: plans.TopKPerKeyExec => t }.isEmpty,
+      s"rank consumer must keep the window:\n$kept")
   }
 
   test("TopKPerKeyExec under AQE: the induced exchange still coalesces at runtime") {
@@ -793,8 +807,6 @@ class PlanShapeSpec extends SparkSpec {
   test("rank-filter rewrite: rank consumed through a correlated SUBQUERY keeps the window") {
     import org.apache.spark.sql.functions.{col, row_number}
     import org.apache.spark.sql.expressions.{Window => W}
-    val savedOpt = spark.experimental.extraOptimizations
-    val savedStrat = spark.experimental.extraStrategies
     val w = W.partitionBy("o_custkey")
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
     ops.Sources.table(spark, dir, "orders")
@@ -807,12 +819,13 @@ class PlanShapeSpec extends SparkSpec {
     val sql = "SELECT o_custkey, o_orderkey FROM ranked_subq a " +
       "WHERE o_totalprice > (SELECT avg(o_totalprice) " +
       "FROM ranked_subq b WHERE b.rn = a.rn)"
-    val expected = spark.sql(sql).collect()
+    // the expected rows come from the stock optimizer: the session's
+    // GraftExtensions rule excluded for this one collect
+    val excluded = "spark.sql.optimizer.excludedRules"
+    spark.conf.set(excluded, plans.RewriteRankFilterToTopK.ruleName)
+    val expected = try spark.sql(sql).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    spark.experimental.extraOptimizations =
-      savedOpt :+ plans.RewriteRankFilterToTopK
-    if (!savedStrat.exists(_.isInstanceOf[plans.GraftStrategies]))
-      spark.experimental.extraStrategies = savedStrat :+ new plans.GraftStrategies
+    finally spark.conf.unset(excluded)
     try {
       val q = spark.sql(sql)
       val got = q.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -822,8 +835,6 @@ class PlanShapeSpec extends SparkSpec {
       assert(collectAll(plan) { case t: plans.TopKPerKeyExec => t }.isEmpty,
         s"rank consumed via subquery correlation — the window must stay:\n$plan")
     } finally {
-      spark.experimental.extraOptimizations = savedOpt
-      spark.experimental.extraStrategies = savedStrat
       spark.catalog.dropTempView("ranked_subq")
     }
   }
@@ -1126,9 +1137,10 @@ class PlanShapeSpec extends SparkSpec {
     assert(bhj.exists(_.leftKeys.exists(_.toString.contains("cell"))),
       s"the Hamming tier must equi-join by cell:\n$plan")
     // the candK selection must be a BOUNDED per-group selection: the
-    // custom heap (extensions sessions — PLANS.md shows TopKPerKey) or
-    // Spark's own WindowGroupLimit rank pushdown (vanilla sessions,
-    // like this suite's) — never an unbounded full-partition window
+    // custom heap GraftExtensions plans (this suite's session, like
+    // Bench's) or, in a session without the extensions, Spark's own
+    // WindowGroupLimit rank pushdown — never an unbounded full-partition
+    // window
     val bounded = collectAll(plan) {
       case t: graft.plans.TopKPerKeyExec => t: Any
       case w: org.apache.spark.sql.execution.window.WindowGroupLimitExec => w: Any

@@ -3,19 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session: one per suite, lazily created. */
+/** The shipped engine's session ([[GraftSession]]) on a fixed 4 cores,
+  * shared by every suite in the test JVM. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // tz-naive driver parquet reads as an instant, not TIMESTAMP_NTZ
-    // (NTZ breaks streaming watermarks; UTC session tz keeps values equal)
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
 }

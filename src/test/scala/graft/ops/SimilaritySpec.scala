@@ -239,13 +239,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("vec_dot is SQL-callable once GraftExtensions' builder is registered") {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    spark.sessionState.functionRegistry.registerFunction(
-      new FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[graft.expressions.VecDot].getName, "vec_dot"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.expressions.VecDot(children.head, children(1)))
+    // the suite's session loads GraftExtensions, which registers vec_dot
     val got = spark.sql(
       "SELECT vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d").head().getDouble(0)
     assert(got == 11.0)

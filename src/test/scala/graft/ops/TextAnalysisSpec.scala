@@ -626,13 +626,7 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("nfc_normalize is SQL-callable once GraftExtensions' builder is registered") {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    spark.sessionState.functionRegistry.registerFunction(
-      new FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[graft.expressions.NfcNormalize].getName, "nfc_normalize"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.expressions.NfcNormalize(children.head))
+    // the suite's session loads GraftExtensions, which registers nfc_normalize
     val got = spark.sql("SELECT nfc_normalize('é') AS n").head().getString(0)
     assert(got == "\u00e9")
   }

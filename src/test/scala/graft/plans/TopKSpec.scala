@@ -1,15 +1,17 @@
 package graft.plans
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SortExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.ops.{Sources, TopK}
 
-class TopKSpec extends SparkSpec {
+class TopKSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private val dir = "/root/testdata/sf0.001"
@@ -22,6 +24,24 @@ class TopKSpec extends SparkSpec {
     }
   }
 
+  /** Runs `body` with the session's rank-filter rewrite excluded. The
+    * rank-window references below are exactly the shape that rule turns
+    * into TopKPerKeyExec, so without this they would compare the operator
+    * with itself. */
+  private def stockOptimizer[T](body: => T): T = {
+    val excluded = "spark.sql.optimizer.excludedRules"
+    spark.conf.set(excluded, RewriteRankFilterToTopK.ruleName)
+    try body finally spark.conf.unset(excluded)
+  }
+
+  /** `df` planned as a real window, not as the operator under test. */
+  private def assertWindowed(df: DataFrame): Unit = {
+    val plan = df.queryExecution.executedPlan
+    assert(collect(plan) { case w: WindowExec => w }.nonEmpty &&
+        collect(plan) { case t: TopKPerKeyExec => t }.isEmpty,
+      s"the reference must run as a rank window:\n$plan")
+  }
+
   test("TopK.perKey == rank-window formulation on real data (total order)") {
     val o = Sources.table(spark, dir, "orders")
     val custom = TopK.perKey(o,
@@ -31,10 +51,13 @@ class TopKSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val w = Window.partitionBy("o_custkey")
       .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-    val windowed = o.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") <= 3)
-      .select("o_custkey", "o_orderkey")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val windowed = stockOptimizer {
+      val ref = o.withColumn("_rn", row_number().over(w))
+        .filter(col("_rn") <= 3)
+        .select("o_custkey", "o_orderkey")
+      assertWindowed(ref)
+      ref.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
     assert(custom == windowed)
     assert(custom.nonEmpty)
   }
@@ -89,10 +112,13 @@ class TopKSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      val windowed = o.withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") <= 3)
-        .select("o_custkey", "o_orderkey")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val windowed = stockOptimizer {
+        val ref = o.withColumn("_rn", row_number().over(w))
+          .filter(col("_rn") <= 3)
+          .select("o_custkey", "o_orderkey")
+        assertWindowed(ref)
+        ref.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      }
       assert(custom == windowed)
       assert(custom.size > 100) // big enough that the spill path really ran
     } finally spark.conf.unset("spark.graft.topKPerKey.maxRowsInMemory")
@@ -117,19 +143,23 @@ class TopKSpec extends SparkSpec {
         (col("id") % 1200000L).as("k"),
         col("id"),
         ((col("id") * 2654435761L) % 1000003L).cast("double").as("v"))
-      def checksum(df: org.apache.spark.sql.DataFrame): (Long, java.math.BigDecimal) = {
-        val r = df.agg(count(lit(1)),
-          sum(xxhash64(col("k"), col("id")).cast("decimal(38,0)"))).head()
+      def checksumOf(df: DataFrame): DataFrame = df.agg(count(lit(1)),
+        sum(xxhash64(col("k"), col("id")).cast("decimal(38,0)")))
+      def checksum(agg: DataFrame): (Long, java.math.BigDecimal) = {
+        val r = agg.head()
         (r.getLong(0), r.getDecimal(1))
       }
       System.setErr(new java.io.PrintStream(errBuf, true))
       val custom = TopK.perKey(base, Seq("k"), Seq("v" -> false, "id" -> true), 2)
-      val customSum = checksum(custom)
+      val customSum = checksum(checksumOf(custom))
       System.setErr(errWas)
       val w = Window.partitionBy("k").orderBy(col("v").desc, col("id").asc)
-      val windowed = base.withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") <= 2).drop("_rn")
-      val windowSum = checksum(windowed)
+      val windowSum = stockOptimizer {
+        val ref = checksumOf(base.withColumn("_rn", row_number().over(w))
+          .filter(col("_rn") <= 2).drop("_rn"))
+        assertWindowed(ref)
+        checksum(ref)
+      }
       // order-independent checksum equality: same rows survive either way
       assert(customSum == windowSum, s"$customSum vs $windowSum")
       assert(customSum._1 > 1000000L,
@@ -155,10 +185,13 @@ class TopKSpec extends SparkSpec {
       val custom = TopK.perKey(df, Seq("k"), Seq("v" -> false, "id" -> true), 2)
         .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
       val w = Window.partitionBy("k").orderBy(col("v").desc, col("id").asc)
-      val windowed = df.withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") <= 2)
-        .select("k", "id")
-        .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
+      val windowed = stockOptimizer {
+        val ref = df.withColumn("_rn", row_number().over(w))
+          .filter(col("_rn") <= 2)
+          .select("k", "id")
+        assertWindowed(ref)
+        ref.collect().map(r => (r.getInt(0), r.getLong(1))).toSet
+      }
       assert(custom == windowed)
       assert(custom.size == 80)
     } finally spark.conf.unset("spark.graft.topKPerKey.maxRowsInMemory")

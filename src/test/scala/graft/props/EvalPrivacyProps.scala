@@ -1,6 +1,5 @@
 package graft.props
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
@@ -18,15 +17,7 @@ object EvalPrivacyProps extends Properties("graft.invariants.round7eval") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(15)
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("round7eval-props")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-    .getOrCreate()
+  private lazy val spark = graft.GraftSession.local(4)
 
   private val genWord: Gen[String] =
     Gen.choose(1, 8).flatMap(n =>

@@ -1,6 +1,6 @@
 package graft.props
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
@@ -14,15 +14,7 @@ import graft.ops.{Aggregates, Cleansing, Dedup, MergeUpdate, Reshape}
   */
 object InvariantProps extends Properties("graft.invariants") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("props")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-    .getOrCreate()
+  private lazy val spark = graft.GraftSession.local(4)
 
   private val genCell: Gen[Option[String]] = Gen.frequency(
     3 -> Gen.choose(0, 10).map(n => Some(n.toString)),

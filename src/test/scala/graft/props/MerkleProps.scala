@@ -1,6 +1,5 @@
 package graft.props
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
@@ -18,15 +17,7 @@ import graft.ops.{Hashing, Profile}
   */
 object MerkleProps extends Properties("graft.merkle") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("props")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-    .getOrCreate()
+  private lazy val spark = graft.GraftSession.local(4)
 
   private val genRows: Gen[List[(Long, String)]] = for {
     n <- Gen.choose(1, 60)

@@ -1,6 +1,5 @@
 package graft.props
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
@@ -16,15 +15,7 @@ object ModelMixProps extends Properties("graft.invariants.round7") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(15)
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("round7-props")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-    .getOrCreate()
+  private lazy val spark = graft.GraftSession.local(4)
 
   private val words = Seq("alpha", "beta", "gamma", "delta", "eps", "zeta")
 

@@ -1,6 +1,5 @@
 package graft.props
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
@@ -18,15 +17,7 @@ import graft.ops.Sampling
   */
 object ShuffleProps extends Properties("graft.shuffle") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("props")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-    .getOrCreate()
+  private lazy val spark = graft.GraftSession.local(4)
 
   private val genCase: Gen[(Long, Int, Int)] = for {
     seed <- Gen.choose(Long.MinValue / 4, Long.MaxValue / 4)
