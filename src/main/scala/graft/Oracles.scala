@@ -18,8 +18,11 @@ object Oracles {
       s"ELSE $v END AS h_${dayNames(d)}"
   }
 
-  /** Lenient day-first parse — mirrors Cleansing.parseDateLenient
-    * (day-first slash, day-first dash, ISO; first success wins). */
+  /** The week-start parse for the timesheet fixture's oracles: only the
+    * three shapes `TimesheetFixture.wide` writes (day-first slash,
+    * day-first dash, ISO; first success wins), not the whole
+    * `Cleansing.parseDateLenient` cascade. q225 and q265 prove the other
+    * shapes with identity oracles instead. */
   def dateLenientSql(x: String): String =
     s"CAST(coalesce(try_strptime($x, '%d/%m/%Y'), " +
       s"try_strptime($x, '%d-%m-%Y'), try_strptime($x, '%Y-%m-%d')) AS DATE)"

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.expressions.LenientDate
 import graft.fixtures.TimesheetFixture
 import graft.ops._
 import graft.pipelines.{CurationPipeline, TimesheetPipeline}
@@ -3390,15 +3391,15 @@ object SparkEntry {
         // full + abbreviated, French accented, German "5. März 2025"
         // day-dot convention, Spanish "de" connective
         .when(shape === 10, concat(day.cast("string"), lit(" "),
-          element_at(typedlit(Cleansing.monthsIt), m), lit(" "), yr))
+          element_at(typedlit(LenientDate.monthsIt), m), lit(" "), yr))
         .when(shape === 11, concat(day.cast("string"), lit(" "),
-          element_at(typedlit(Cleansing.monthsItAbbr), m), lit(" "), yr))
+          element_at(typedlit(LenientDate.monthsItAbbr), m), lit(" "), yr))
         .when(shape === 12, concat(day.cast("string"), lit(" "),
-          element_at(typedlit(Cleansing.monthsFr), m), lit(" "), yr))
+          element_at(typedlit(LenientDate.monthsFr), m), lit(" "), yr))
         .when(shape === 13, concat(day.cast("string"), lit(". "),
-          initcap(element_at(typedlit(Cleansing.monthsDe), m)), lit(" "), yr))
+          initcap(element_at(typedlit(LenientDate.monthsDe), m)), lit(" "), yr))
         .when(shape === 14, concat(day.cast("string"), lit(" de "),
-          element_at(typedlit(Cleansing.monthsEs), m), lit(" de "), yr))
+          element_at(typedlit(LenientDate.monthsEs), m), lit(" de "), yr))
         // datetime strings: the reference's target-cell pd.to_datetime
         // accepts these and .date() truncates — the cascade must too
         .when(shape === 15, concat(date_format(d0, "d/M/yyyy"), lit(" "),

@@ -2,15 +2,21 @@ package graft.ops
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.DoubleType
+
+import graft.expressions.LenientDate
 
 /** Scalar cleansing / parsing layer (SURVEY.md §2.2, operators P1-P11).
   *
-  * Pure `Column => Column` functions: they stay inside whole-stage codegen,
-  * push down through Catalyst, and are independently unit-testable. Null/parse
-  * tolerance uses `try_*` semantics (null-on-failure) rather than exceptions,
-  * matching the reference's row-skip / default-on-error behavior
-  * (reference: timesheet_transform.py:44-82).
+  * `Column => Column` functions: they stay inside whole-stage codegen,
+  * push down through Catalyst, and are independently unit-testable. Most
+  * are compositions of Spark builtins; the lenient date parse is one
+  * native expression ([[graft.expressions.LenientDate]]), because as a
+  * builtin composition it outgrew the codegen method limit. Null/parse
+  * tolerance uses `try_*` semantics (null-on-failure) rather than
+  * exceptions, matching the reference's row-skip / default-on-error
+  * behavior (reference: timesheet_transform.py:44-82).
   */
 object Cleansing {
 
@@ -18,134 +24,13 @@ object Cleansing {
     * (reference: timesheet_transform.py:44-46). */
   def hasWeekRange(c: Column): Column = c.isNotNull && c.contains(" al ")
 
-  /** Lenient day-first date parse — the pandas
-    * `to_datetime(dayfirst=True)` tolerance the reference relies on
-    * (timesheet_transform.py:49,121). Day-first numeric formats take
-    * precedence (mirrors `dayfirst=True`), then the unambiguous shapes
-    * dateutil also accepts: ISO with either separator, dotted European,
-    * compact 8-digit, English month names (short and full), ordinal
-    * day suffixes ("7th March 2024", "March 7th, 2024" — the suffix is
-    * stripped before the month-name branches), and two-digit years
-    * day-first ("7/3/24"). Two-digit years pivot at the FIXED POSIX
-    * boundary — 00-49 → 20xx, 50-99 → 19xx — where dateutil pivots ±50
-    * years around the CURRENT date; fixed wins here because a parse
-    * that changes meaning with the wall clock can never be
-    * oracle-checked (divergence only for years 2050+, i.e. 24+ years of
-    * margin). Later branches only fire when every earlier one fails (a
-    * 4-digit day never parses; month names never parse numerically), so
-    * widening the cascade cannot change the meaning of a string an
-    * earlier branch accepted. Null on total failure — the callers'
-    * row-skip contract. */
-  /** European month names for the locale branch of [[parseDateLenient]]
-    * — an explicit literal map, NOT JVM locale data: deterministic across
-    * JVMs and expressible as the identical mapping in an oracle's SQL.
-    * The reference is an *Italian* timesheet tool (dateutil itself needs
-    * a locale parserinfo for `5 marzo 2025` — timesheet_transform.py:49,
-    * 121), so Italian full + abbreviated names lead; French, German and
-    * Spanish full names ride along with accent-stripped variants. */
-  val monthsIt: Seq[String] = Seq("gennaio", "febbraio", "marzo", "aprile",
-    "maggio", "giugno", "luglio", "agosto", "settembre", "ottobre",
-    "novembre", "dicembre")
-  val monthsItAbbr: Seq[String] = Seq("gen", "feb", "mar", "apr", "mag",
-    "giu", "lug", "ago", "set", "ott", "nov", "dic")
-  val monthsFr: Seq[String] = Seq("janvier", "février", "mars", "avril",
-    "mai", "juin", "juillet", "août", "septembre", "octobre", "novembre",
-    "décembre")
-  val monthsDe: Seq[String] = Seq("januar", "februar", "märz", "april",
-    "mai", "juni", "juli", "august", "september", "oktober", "november",
-    "dezember")
-  val monthsEs: Seq[String] = Seq("enero", "febrero", "marzo", "abril",
-    "mayo", "junio", "julio", "agosto", "septiembre", "octubre",
-    "noviembre", "diciembre")
-
-  /** lowercase word → month number; duplicates across languages agree on
-    * the month by construction, so Map dedup is safe. */
-  private val localeMonthMap: Map[String, Int] =
-    (Seq(monthsIt, monthsItAbbr, monthsFr, monthsDe, monthsEs)
-      .flatMap(_.zipWithIndex.map { case (w, i) => w -> (i + 1) }) ++
-      Seq("fevrier" -> 2, "aout" -> 8, "decembre" -> 12, "marz" -> 3))
-      .toMap
-
-  def parseDateLenient(c: Column): Column = {
-    // "7th" -> "7" ahead of the month-name branches only: digits glued
-    // to st/nd/rd/th are day ordinals there; the numeric branches never
-    // see the rewrite, so "1st-2nd-3rd" garbage can't leak into them
-    val noOrd = regexp_replace(c, "(?i)\\b(\\d{1,2})(st|nd|rd|th)\\b", "$1")
-    // dateutil-style two-digit-year completion, fixed POSIX pivot
-    def pivot(d: Column): Column =
-      when(year(d) >= 2050,
-        make_date(year(d) - 100, month(d), dayofmonth(d))).otherwise(d)
-    // DISPATCH GUARDS — each failed try_to_date costs a thrown/caught
-    // exception inside Spark's parser, so a 15-branch cascade pays ~14
-    // exceptions per exotic string. A cheap regexp pre-test (codegen'd,
-    // no allocation) gates every branch on a NECESSARY shape condition:
-    // only plausible formats are attempted, the precedence order is
-    // untouched, and a guard that is merely loose costs one extra
-    // attempt, never a wrong parse. Measured on the all-shapes cascade
-    // bench q225 at sf0.1: 4.26 s -> 3.17 s (residual cost is the
-    // successful parse itself); the flagship's clean shapes were
-    // already fail-fast, q01 unchanged.
-    val hasAlpha = c.rlike("[A-Za-z]")
-    def guarded(src: Column, re: String, fmt: String): Column =
-      when(src.rlike(re), try_to_date(src, fmt))
-    def guardedTs(src: Column, re: String, fmt: String): Column =
-      when(src.rlike(re), try_to_timestamp(src, lit(fmt)).cast("date"))
-    val num = !hasAlpha
-    // LOCALE month names (it full + abbrev, fr/de/es): normalize the
-    // Spanish "de" connective ("5 de marzo de 2025") and the German day
-    // dot ("5. März 2025"), extract the month word, map it through the
-    // literal table, re-parse numerically. try_element_at nulls unknown
-    // words under ANSI; concat_ws then yields a shape try_to_date
-    // rejects — the cascade's null-on-failure contract throughout.
-    // \p{L} (not [A-Za-z]): accented month letters must match the shape.
-    val loc = regexp_replace(
-      regexp_replace(noOrd,
-        "(?i)(\\d{1,2})\\s+de\\s+(\\p{L}+)\\s+de\\s+(\\d{4})", "$1 $2 $3"),
-      "(?i)\\b(\\d{1,2})\\.\\s*(?=\\p{L})", "$1 ")
-    val locShaped = loc.rlike("^\\s*\\d{1,2}[ -]\\p{L}+[ -]\\d{4}\\s*$")
-    val monthWord = lower(
-      regexp_extract(loc, "^\\s*\\d{1,2}[ -](\\p{L}+)[ -]\\d{4}\\s*$", 1))
-    val monthNum = try_element_at(typedlit(localeMonthMap), monthWord)
-    val locRebuilt = concat_ws("/",
-      regexp_extract(loc, "^\\s*(\\d{1,2})", 1),
-      monthNum.cast("string"),
-      regexp_extract(loc, "(\\d{4})\\s*$", 1))
-    coalesce(
-      when(num, guarded(c, "^\\s*\\d{1,2}/\\d{1,2}/\\d{4}\\s*$", "d/M/yyyy")),
-      when(num, guarded(c, "^\\s*\\d{1,2}-\\d{1,2}-\\d{4}\\s*$", "d-M-yyyy")),
-      when(num, guarded(c, "^\\s*\\d{4}-\\d{1,2}-\\d{1,2}\\s*$", "yyyy-M-d")),
-      when(num, guarded(c, "^\\s*\\d{1,2}\\.\\d{1,2}\\.\\d{4}\\s*$", "d.M.yyyy")),
-      when(num, guarded(c, "^\\s*\\d{4}/\\d{1,2}/\\d{1,2}\\s*$", "yyyy/M/d")),
-      when(num, guarded(c, "^\\s*\\d{8}\\s*$", "yyyyMMdd")),
-      // datetime STRINGS truncate to date — the reference's target-cell
-      // coercion (timesheet_transform.py:121-125: pd.to_datetime accepts
-      // "5/3/2025 14:30" and .date() drops the time). Guards are
-      // anchored, so date-only shapes never reach these branches.
-      when(num, guardedTs(c,
-        "^\\s*\\d{1,2}/\\d{1,2}/\\d{4} \\d{1,2}:\\d{2}\\s*$",
-        "d/M/yyyy H:mm")),
-      when(num, guardedTs(c,
-        "^\\s*\\d{1,2}/\\d{1,2}/\\d{4} \\d{1,2}:\\d{2}:\\d{2}\\s*$",
-        "d/M/yyyy H:mm:ss")),
-      // ISO datetime may carry a "T" separator (alpha, so it bypasses
-      // the num gate); its own leading-yyyy- pre-test is the dispatch
-      when(c.rlike("^\\s*\\d{4}-"), guardedTs(regexp_replace(c, "T", " "),
-        "^\\s*\\d{4}-\\d{1,2}-\\d{1,2} \\d{1,2}:\\d{2}:\\d{2}\\s*$",
-        "yyyy-M-d H:mm:ss")),
-      when(c.rlike("^\\s*\\d{4}-"), guardedTs(regexp_replace(c, "T", " "),
-        "^\\s*\\d{4}-\\d{1,2}-\\d{1,2} \\d{1,2}:\\d{2}\\s*$",
-        "yyyy-M-d H:mm")),
-      when(hasAlpha, guarded(c, "^\\s*\\d{1,2} [A-Za-z]+ \\d{4}\\s*$", "d MMM yyyy")),
-      when(hasAlpha, guarded(c, "^\\s*\\d{1,2}-[A-Za-z]+-\\d{4}\\s*$", "d-MMM-yyyy")),
-      when(hasAlpha, guarded(c, "^\\s*[A-Za-z]+ \\d{1,2}, \\d{4}\\s*$", "MMMM d, yyyy")),
-      when(hasAlpha, guarded(noOrd, "^\\s*\\d{1,2} [A-Za-z]+ \\d{4}\\s*$", "d MMMM yyyy")),
-      when(hasAlpha, guarded(noOrd, "^\\s*\\d{1,2} [A-Za-z]+ \\d{4}\\s*$", "d MMM yyyy")),
-      when(hasAlpha, guarded(noOrd, "^\\s*[A-Za-z]+ \\d{1,2}, \\d{4}\\s*$", "MMMM d, yyyy")),
-      when(hasAlpha, guarded(noOrd, "^\\s*[A-Za-z]+ \\d{1,2} \\d{4}\\s*$", "MMMM d yyyy")),
-      when(num, pivot(guarded(c, "^\\s*\\d{1,2}/\\d{1,2}/\\d{2}\\s*$", "d/M/yy"))),
-      when(num, pivot(guarded(c, "^\\s*\\d{1,2}-\\d{1,2}-\\d{2}\\s*$", "d-M-yy"))),
-      when(hasAlpha && locShaped, try_to_date(locRebuilt, "d/M/yyyy")))
-  }
+  /** Lenient day-first date parse — the pandas `to_datetime(dayfirst=True)`
+    * tolerance the reference relies on (timesheet_transform.py:49,121):
+    * the 20-branch cascade of [[graft.expressions.LenientDate]], whose
+    * scaladoc lists the shapes, the two-digit-year pivot and the branch
+    * order. Null on total failure — the callers' row-skip contract. */
+  def parseDateLenient(c: Column): Column =
+    Bridge.column(LenientDate(Bridge.expression(c)))
 
   /** [[parseDateLenient]] extended with dateutil's YEARLESS free-form
     * shapes — "Wed, March 5", "March 5th", "5 March", "5/3". dateutil

@@ -77,6 +77,80 @@ class PlanShapeSpec extends SparkSpec {
       s"expected the one filter above the exchange:\n$held")
   }
 
+  test("lenient week parse: q01/q11/q25 run one LenientDate, and every codegen stage compiles") {
+    import scala.jdk.CollectionConverters._
+    import scala.util.Try
+    import org.apache.spark.sql.catalyst.expressions.{Expression, GetTimestamp, ParseToDate, RLike}
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import org.apache.spark.sql.execution.{FilterExec, InputAdapter, QueryExecution, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // the nodes one codegen stage fuses (its inputs are other stages)
+    def fused(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case _: InputAdapter => Nil
+      case _ => p.children.flatMap(fused)
+    })
+    // q11 returns a read-back of its partitioned write: the parse runs
+    // in the write, whose plan only a listener sees
+    def writePlan(q: String): SparkPlan = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+      val listener = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          seen.add(qe.executedPlan)
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      def write: Option[SparkPlan] = seen.asScala.find(p =>
+        deepCollect(p) { case w: DataWritingCommandExec => w }.nonEmpty)
+      spark.listenerManager.register(listener)
+      try {
+        SparkEntry.queries(q)(spark, dir)
+        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+        while (write.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+        write.getOrElse(fail(s"$q: no write execution was reported"))
+      } finally spark.listenerManager.unregister(listener)
+    }
+    // the plan AQE ran, codegen stages included
+    def ran(q: String): SparkPlan = {
+      val df = SparkEntry.queries(q)(spark, dir)
+      df.collect()
+      df.queryExecution.executedPlan
+    }
+    val limit = spark.conf.get("spark.sql.codegen.hugeMethodLimit").toInt
+    val plans = Seq(
+      "q01_e1_flagship" -> ran("q01_e1_flagship"),
+      "q11_part_write" -> writePlan("q11_part_write"),
+      "q25_e2_pipeline" -> ran("q25_e2_pipeline"))
+    for ((q, plan) <- plans) {
+      val all = deepCollect(plan) { case n => n }
+      // codegen first: a Column parse cascade copied into a pushed-down
+      // filter outgrows the 64 KB method limit, and Spark then runs the
+      // whole stage interpreted with only a WARN
+      val stages = all.collect { case w: WholeStageCodegenExec => w }
+      assert(stages.nonEmpty, s"$q: no codegen stage:\n$plan")
+      for (w <- stages) {
+        val size = Try(CodeGenerator.compile(w.doCodeGen()._2)._2.maxMethodCodeSize)
+          .recover { case e => fail(s"$q: codegen stage ${w.codegenStageId} does not compile: $e") }
+          .get
+        assert(size <= limit,
+          s"$q: codegen stage ${w.codegenStageId} has a $size-byte method")
+      }
+      val exprs: Seq[Expression] = all.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+      assert(exprs.exists(_.isInstanceOf[expressions.LenientDate]),
+        s"$q: no lenient_date in:\n$plan")
+      val cascade = exprs.filter {
+        case _: RLike | _: GetTimestamp | _: ParseToDate => true
+        case _ => false
+      }
+      assert(cascade.isEmpty, s"$q: regex/parse cascade left in the plan: " +
+        cascade.map(_.prettyName).distinct.mkString(", "))
+      val weekFilterStaged = stages.exists(w => fused(w.child).exists {
+        case f: FilterExec => f.condition.exists(_.isInstanceOf[expressions.LenientDate])
+        case _ => false
+      })
+      assert(weekFilterStaged, s"$q: the week filter runs outside whole-stage codegen:\n$plan")
+    }
+  }
+
   test("similarity top-k: query side broadcasts (corpus never shuffles for the join)") {
     import org.apache.spark.sql.functions.col
     val e = ops.Sources.table(spark, dir, "embeddings")
@@ -342,11 +416,13 @@ class PlanShapeSpec extends SparkSpec {
   // reach: holistic AGGREGATIONS (collect_set & co. — Skew.setJoinSumSalted)
   // whose hot-key buffer still concentrates on one reducer, and
   // pre-partitioned/bucketed layouts that bypass the exchange.
-  // collect through AQE query-stage boundaries (QueryStageExec is a leaf
-  // whose executed subtree hangs off .plan, invisible to plain collect)
+  // collect through AQE boundaries (QueryStageExec and a nested
+  // AdaptiveSparkPlanExec are leaves whose executed subtrees hang off
+  // .plan / .executedPlan, invisible to plain collect)
   private def deepCollect[T](p: SparkPlan)(pf: PartialFunction[SparkPlan, T]): Seq[T] =
     p.collect(pf) ++ p.collect {
       case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => q.plan
+      case a: AdaptiveSparkPlanExec => a.executedPlan
     }.flatMap(deepCollect(_)(pf))
 
   test("AQE skew-join: a hot key's reduce partition is split at runtime") {
