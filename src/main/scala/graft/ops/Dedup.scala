@@ -452,134 +452,21 @@ object Dedup {
         bit_count(fpXor).as("hdist"))
   }
 
+  /** Rounds executed by the most recent [[connectedComponentsStar]] call
+    * on this JVM, the convergence-confirming round included — the
+    * measurement hook of the round-count comparison spec. */
+  @volatile var ccLastRounds: Int = 0
+
   /** Connected components over an undirected edge list — turns near-dup
     * PAIRS (any of the pair generators above) into duplicate CLUSTERS,
     * the form a dedup pipeline actually consumes (keep one doc per
     * component, drop the rest).
     *
-    * Since round 10 this is the REFERENCE implementation: production
-    * rows go through [[connectedComponentsStar]], which measured
-    * 1.7× faster at sf1 (5 rounds vs 12 — the star rounds also shrink
-    * the edge frame; see its scaladoc and graft.tools.CcRounds). Kept
-    * because the two independently-derived algorithms agreeing on
-    * every fixture and every query is the cross-check that guards the
-    * iterative-graph family, and because its per-round shape (ONE
-    * static join + agg) is simpler to reason about.
-    *
-    * Min-label propagation with pointer jumping: every node starts
-    * labeled with its own id; each round takes the min of its own and
-    * its neighbors' labels, then replaces its label by its label's label
-    * (path halving), so rounds are O(log diameter) instead of
-    * O(diameter) — the standard MapReduce CC acceleration (cf. Kiveris
-    * et al., "Connected Components in MapReduce and Beyond"). Labels are
-    * monotone non-increasing, so the label SUM strictly decreases until
-    * the fixpoint: convergence is one cheap aggregate (exact decimal
-    * sum — no overflow ambiguity), never a data-sized driver collect.
-    * Labels being monotone, equal sums `probeEvery` rounds apart prove
-    * NOTHING changed in between — so probing every 2 rounds halves the
-    * job count with no correctness loss. Per-round frames are
-    * checkpointed to truncate lineage; every shuffle is bounded by
-    * |edges|.
-    *
-    * Durability: `localCheckpoint` stores blocks on executors — fine in
-    * local mode, but on a real cluster an executor loss makes the
-    * lineage non-replayable and kills the job. For long chains at scale
-    * set `spark.sparkContext.setCheckpointDir(...)` and pass
-    * `reliableEvery = k` to write a RELIABLE (replayable-from-storage)
-    * checkpoint every k rounds; intermediate rounds stay local.
-    *
-    * Returns (id, rep) with rep = min id in the component. Deterministic
-    * regardless of partitioning or iteration count. Non-convergence at
-    * `maxIter` (possible only on adversarially deep graphs given pointer
-    * jumping's O(log d) rounds) is loudly signaled on stderr — the
-    * partially-merged labels are a valid coarsening but NOT components.
-    */
-  def connectedComponents(
-      edges: DataFrame,
-      aCol: String,
-      bCol: String,
-      maxIter: Int = 50,
-      probeEvery: Int = 2,
-      reliableEvery: Int = 0): DataFrame = {
-    require(probeEvery >= 1, "probeEvery must be >= 1")
-    // materialize the (possibly expensive) edge derivation ONCE: the
-    // symmetrizing union references it twice and would recompute it
-    val e0 = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .localCheckpoint()
-    val sym = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-    // static propagation edges: the graph plus self-loops. The self-loop
-    // carries a node's own label through the min, so each round is ONE
-    // join + one min-aggregate (no second "keep own label" join) — and it
-    // folds the first neighbor-min round into label init: min(dst) over
-    // base is min(id, min neighbor id) directly.
-    val base = sym
-      .union(sym.select(col("src"), col("src").as("dst")).distinct())
-      .localCheckpoint(false)
-    var labels = base.groupBy("src").agg(min("dst").as("rep"))
-      .select(col("src").as("id"), col("rep"))
-      .localCheckpoint(false)
-    // LAZY local checkpoints (eager=false): each round's frame still
-    // truncates lineage — next's plan references labels 3× and would
-    // otherwise grow exponentially across rounds — but materializes
-    // inside the next probe's job instead of an eager checkpoint job
-    // plus the probe. Every `reliableEvery`-th round is promoted to a
-    // reliable checkpoint when a checkpoint dir is configured.
-    val sc = edges.sparkSession.sparkContext
-    def save(df: DataFrame, round: Int): DataFrame =
-      if (reliableEvery > 0 && round % reliableEvery == 0 &&
-        sc.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint(false)
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val v = df.agg(sum(col("rep").cast("decimal(38,0)"))).head.getDecimal(0)
-      if (v == null) java.math.BigDecimal.ZERO else v
-    }
-    var prevSum: java.math.BigDecimal = labelSum(labels)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // per-round edges = base ∪ label links both ways: v -> rep(v)
-      // contributes rep(rep(v)) (a pointer jump, for free, inside the
-      // same join) and rep(v) -> v spreads a low label back up. Labels
-      // are monotone non-increasing (the self-loop keeps the current
-      // label in the min), so the decimal label sum strictly decreases
-      // until fixpoint — the convergence probe is one cheap aggregate,
-      // never a data-sized driver collect.
-      val linkF = labels.select(col("id").as("src"), col("rep").as("dst"))
-      val linkR = labels.select(col("rep").as("src"), col("id").as("dst"))
-      val next = base.union(linkF).union(linkR)
-        .join(labels.withColumnRenamed("id", "dst"), "dst")
-        .groupBy("src").agg(min("rep").as("rep"))
-        .select(col("src").as("id"), col("rep"))
-      iter += 1
-      labels = save(next, iter)
-      if (iter % probeEvery == 0 || iter == maxIter) {
-        val curSum = labelSum(labels) // materializes the lazy checkpoint
-        converged = curSum == prevSum
-        prevSum = curSum
-      }
-    }
-    if (!converged)
-      System.err.println(s"WARN graft.Dedup.connectedComponents: NOT " +
-        s"converged after maxIter=$maxIter rounds — returned labels are a " +
-        "partial coarsening, not connected components")
-    ccLastRounds = iter
-    labels
-  }
-
-  /** Rounds executed by the most recent [[connectedComponents]] /
-    * [[connectedComponentsStar]] call on this JVM — measurement hook for
-    * the round-count comparison spec and [[graft.tools.CcRounds]]
-    * (includes the convergence-confirming round; probe cadence can
-    * overshoot the fixpoint by up to `probeEvery - 1`). */
-  @volatile var ccLastRounds: Int = 0
-
-  /** Connected components via LARGE-STAR / SMALL-STAR alternation
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * 2014) — since round 10 THE production implementation behind
-    * [[clusters]] and the q43/q63/q88-family rows, chosen by
-    * measurement over [[connectedComponents]]' min-label +
-    * pointer-jumping rounds ([[graft.tools.CcRounds]], sf1 simhash
+    * LARGE-STAR / SMALL-STAR alternation (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", 2014) — THE implementation
+    * behind [[clusters]] and the q43/q63/q88-family rows, chosen by
+    * measurement over min-label + pointer-jumping rounds (now the
+    * test-scope reference it is cross-checked against; sf1 simhash
     * edges, 411k pairs): 5 rounds / 3.2 s vs 12 rounds / 5.4 s — both
     * are O(log n) ROUNDS (the diameter-1024 path fixture measures 11
     * rounds each, so neither is O(diameter)), but each star round
@@ -598,8 +485,9 @@ object Dedup {
     * no-driver-collect probe as min-label. At the fixpoint edges form
     * stars child → component-min; labels read off with one final join
     * over the original node set. Returns (id, rep), rep = min member
-    * id, for every node in the input — identical contract and results
-    * to [[connectedComponents]]. */
+    * id, for every node in the input. Non-convergence at `maxIter` is
+    * loudly signaled on stderr — the partially-merged labels are a
+    * valid coarsening but NOT components. */
   def connectedComponentsStar(
       edges: DataFrame,
       aCol: String,
@@ -932,8 +820,7 @@ object Dedup {
     // can't satisfy it (a same-key same-N repartition is pruned as
     // redundant at plan time, and the AQE-coalescible exchange below it
     // becomes the one feeding the explode again)
-    val shufP = reps.sparkSession.conf.get("spark.sql.shuffle.partitions")
-      .toInt
+    val shufP = reps.sparkSession.sessionState.conf.numShufflePartitions
     reps
       .repartition(shufP, col("nm"))
       .select(col("blk"), col("nm"),
@@ -952,7 +839,7 @@ object Dedup {
   }
 
   /** Canonical-document selection (the "which copy survives" step after
-    * clustering): join [[connectedComponents]] labels (id, rep) with a
+    * clustering): join [[connectedComponentsStar]] labels (id, rep) with a
     * per-doc quality score and keep each cluster's best member — max
     * quality, ties broken by min id, so selection is deterministic in any
     * engine. Output (rep, keeper_id, keeper_q, n_members).
@@ -967,7 +854,7 @@ object Dedup {
       qCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // frame-qualified selects: quality's id column may itself be named
-    // "id" (connectedComponents' own output name), which an unqualified
+    // "id" (connectedComponentsStar's own output name), which an unqualified
     // col("id") would make ambiguous
     val j = labels.join(quality, labels("id") === quality(idCol))
       .select(labels("rep"), labels("id"), quality(qCol))
@@ -1045,7 +932,7 @@ object Dedup {
     * of a near-dup cluster but down-weight each to 1/cluster-size so the
     * cluster contributes one document's worth of training mass (the
     * alternative to dropping when provenance or coverage must survive).
-    * `labels` is [[connectedComponents]] output (id, rep); ids absent
+    * `labels` is [[connectedComponentsStar]] output (id, rep); ids absent
     * from any cluster weigh 1.0. Returns (id, cluster_size, weight).
     *
     * Scale shape: cluster sizes are one hash-agg over the LABEL table

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Iterative graph algorithms expressed as DataFrame joins — the family
-  * [[Dedup.connectedComponents]] opened, here the weighted-propagation
+  * [[Dedup.connectedComponentsStar]] opened, here the weighted-propagation
   * side (PageRank). Reference analogue: the reference tool has no graph
   * surface; this serves the corpus-curation journeys (rank documents by
   * how central they are in the near-dup/link graph before choosing
@@ -15,8 +15,10 @@ import org.apache.spark.sql.functions._
   * hash-partitioned on the same key, so consecutive iterations reuse the
   * edge partitioning), then one hash-aggregate by dst whose shuffle
   * carries (dst, partial contribution) — map-side combine means the edge
-  * stream itself never crosses the wire twice. Ranks are rounded to
-  * `roundTo` decimals each iteration: it keeps the float fold
+  * stream itself never crosses the wire twice. The fixed-round operators
+  * take that pre-partitioned static side and their round loop from
+  * [[Rounds]]. Ranks are rounded to 9 decimals each iteration
+  * (the DuckDB oracles mirror it): it keeps the float fold
   * deterministic across engines/partitionings (divergence from summation
   * order is ~1e-15 relative, squashed every round) — and bounds nothing
   * else; the iteration count is fixed, not convergence-tested, exactly
@@ -24,59 +26,35 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** PageRank over a directed edge list (`srcCol`, `dstCol`). Every node
-    * must appear as a source (feed symmetric edges for undirected
-    * graphs — the natural form for similarity graphs); dangling-node mass
-    * redistribution is deliberately out of scope. Returns (id, rank).
-    *
-    * `checkpointEvery`: truncate the logical plan every k iterations with
-    * a lazy localCheckpoint — without it the plan nests one join+agg per
-    * iteration and analysis cost grows superlinearly past ~10 rounds
-    * (same lineage posture as [[Dedup.connectedComponents]]).
-    */
+  private val Damping = 0.85
+  private val Digits = 9
+
+  /** PageRank over a directed edge list (`srcCol`, `dstCol`), damping
+    * 0.85. Every node must appear as a source (feed symmetric edges for
+    * undirected graphs — the natural form for similarity graphs);
+    * dangling-node mass redistribution is deliberately out of scope.
+    * Returns (id, rank). */
   def pageRank(
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
-      iterations: Int = 5,
-      damping: Double = 0.85,
-      roundTo: Int = 9,
-      checkpointEvery: Int = 8): DataFrame = {
+      iterations: Int = 5): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     // static per-source fan-out, computed once and joined every round
     val outdeg = e.groupBy("src")
       .agg(count(lit(1)).cast("double").as("outdeg"))
-    // materialize the degree-annotated edges ONCE, pre-partitioned and
-    // pre-sorted on src: the localCheckpoint truncates the derivation
-    // (otherwise every iteration re-derives the edge list from its source
-    // scans), and the preserved hashpartitioning/ordering means each
-    // round's join shuffles only the (id, rank) side. AQE is switched off
-    // for JUST this materialization: an adaptive plan reports
-    // UnknownPartitioning to the checkpoint (even eagerly executed), and
-    // losing the metadata would re-exchange the edge list every round
-    val sess = edges.sparkSession
-    val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    val withDeg =
-      try {
-        sess.conf.set("spark.sql.adaptive.enabled", "false")
-        e.join(outdeg, "src")
-          .repartition(col("src")).sortWithinPartitions("src")
-          .localCheckpoint(true)
-      } finally sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
-    var ranks = withDeg.select(col("src").as("id")).distinct()
+    val withDeg = Rounds.staticSide(e.join(outdeg, "src"), "src")
+    val ranks = withDeg.select(col("src").as("id")).distinct()
       .withColumn("rank", lit(1.0))
-    for (i <- 1 to iterations) {
-      ranks = withDeg
+    Rounds.run(ranks, iterations) { ranks =>
+      withDeg
         .join(ranks, col("src") === col("id"))
         .groupBy(col("dst"))
-        .agg(round(lit(1.0 - damping) +
-          lit(damping) * sum(col("rank") / col("outdeg")), roundTo).as("r"))
+        .agg(round(lit(1.0 - Damping) +
+          lit(Damping) * sum(col("rank") / col("outdeg")), Digits).as("r"))
         .select(col("dst").as("id"), col("r").as("rank"))
-      if (i % checkpointEvery == 0 && i < iterations)
-        ranks = ranks.localCheckpoint(false)
     }
-    ranks
   }
 
   /** Personalized PageRank: random walks RESTART AT THE SEED SET instead
@@ -88,52 +66,37 @@ object Graph {
     * labeled table — not plan-time literals). Nodes the walk never
     * reaches carry rank 0 and are absent from the output.
     *
-    * Same scale/determinism contract as [[pageRank]] (once-checkpointed
-    * pre-partitioned degree-annotated edges, per-round rounding,
-    * `checkpointEvery` lineage truncation); the per-round extra over
-    * pageRank is one full-outer join against the seed base table, which
-    * shuffles only (id, rank)-sized rows. */
+    * Same scale/determinism contract as [[pageRank]] (degree-annotated
+    * static side, per-round rounding); the per-round extra over pageRank
+    * is one full-outer join against the seed base table, which shuffles
+    * only (id, rank)-sized rows. */
   def personalizedPageRank(
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
       seeds: DataFrame,
       seedCol: String,
-      iterations: Int = 5,
-      damping: Double = 0.85,
-      roundTo: Int = 9,
-      checkpointEvery: Int = 8): DataFrame = {
+      iterations: Int = 5): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val outdeg = e.groupBy("src")
       .agg(count(lit(1)).cast("double").as("outdeg"))
-    val sess = edges.sparkSession
-    val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    val withDeg =
-      try {
-        sess.conf.set("spark.sql.adaptive.enabled", "false")
-        e.join(outdeg, "src")
-          .repartition(col("src")).sortWithinPartitions("src")
-          .localCheckpoint(true)
-      } finally sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
+    val withDeg = Rounds.staticSide(e.join(outdeg, "src"), "src")
     val seedBase = seeds.select(col(seedCol).as("id")).distinct()
-      .withColumn("base", lit(1.0 - damping))
+      .withColumn("base", lit(1.0 - Damping))
       .localCheckpoint(false)
-    var ranks = seedBase.select(col("id"), lit(1.0).as("rank"))
-    for (i <- 1 to iterations) {
+    val ranks = seedBase.select(col("id"), lit(1.0).as("rank"))
+    Rounds.run(ranks, iterations) { ranks =>
       val contrib = withDeg
         .join(ranks, col("src") === col("id"))
         .groupBy(col("dst"))
         .agg(sum(col("rank") / col("outdeg")).as("c"))
         .select(col("dst").as("id"), col("c"))
-      ranks = contrib.join(seedBase, Seq("id"), "full")
+      contrib.join(seedBase, Seq("id"), "full")
         .select(col("id"),
           round(coalesce(col("base"), lit(0.0)) +
-            lit(damping) * coalesce(col("c"), lit(0.0)), roundTo).as("rank"))
-      if (i % checkpointEvery == 0 && i < iterations)
-        ranks = ranks.localCheckpoint(false)
+            lit(Damping) * coalesce(col("c"), lit(0.0)), Digits).as("rank"))
     }
-    ranks
   }
 
   /** HITS hubs-and-authorities over a DIRECTED edge list — PageRank's
@@ -141,42 +104,33 @@ object Graph {
     * good authority is pointed at by good hubs. Each iteration is the
     * textbook mutual update with MAX-normalization (the max is exact —
     * no float summation enters the normalizer — so scores land in [0,1]
-    * deterministically), `roundTo`-rounded like [[pageRank]] so the
+    * deterministically), 9dp-rounded like [[pageRank]] so the
     * per-node float sums stay engine-identical. Fixed `iterations`, the
     * production posture. Returns (id, hub, authority) — a pure source
     * has authority 0, a pure sink hub 0.
     *
-    * Scale shape: TWO once-checkpointed pre-partitioned copies of the
-    * edge list (by dst for the hub step, by src for the authority step) —
-    * each round's joins then shuffle only the (id, score) tables, and
-    * the score aggregates are map-side combined. The normalizing max is
-    * a 1-row broadcast re-entry (the TF-IDF corpus-stats pattern), never
-    * a driver collect. Every round's raw score table is localCheckpointed
-    * BEFORE normalization: the max subquery and the normalized output
-    * both re-enter that table, so an un-materialized subtree would be
+    * Scale shape: TWO static sides (the edge list by dst for the hub
+    * step, by src for the authority step) — each round's joins then
+    * shuffle only the (id, score) tables, and the score aggregates are
+    * map-side combined. The normalizing max is a 1-row broadcast
+    * re-entry (the TF-IDF corpus-stats pattern), never a driver collect.
+    * Every round's raw score table is localCheckpointed BEFORE
+    * normalization: the max subquery and the normalized output both
+    * re-enter that table, so an un-materialized subtree would be
     * recomputed twice per normalization — 2^(2·iterations) recompute of
     * the whole history (measured 31 s → 2.5 s at sf0.01). Unlike
-    * [[pageRank]] (one linear lineage, truncation optional at
-    * `checkpointEvery`), per-round truncation here is load-bearing. */
+    * [[pageRank]] (one linear lineage, truncated every 8th round),
+    * per-half-step truncation here is load-bearing, so HITS keeps its
+    * own two-frame loop. */
   def hits(
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
-      iterations: Int = 4,
-      roundTo: Int = 9): DataFrame = {
+      iterations: Int = 4): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()
-    val sess = edges.sparkSession
-    val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    val (eByDst, eBySrc) =
-      try {
-        sess.conf.set("spark.sql.adaptive.enabled", "false")
-        val d = e.repartition(col("dst")).sortWithinPartitions("dst")
-          .localCheckpoint(true)
-        val s = e.repartition(col("src")).sortWithinPartitions("src")
-          .localCheckpoint(true)
-        (d, s)
-      } finally sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
+    val eByDst = Rounds.staticSide(e, "dst")
+    val eBySrc = Rounds.staticSide(e, "src")
     var auth = eByDst.select(col("dst").as("id")).distinct()
       .withColumn("a", lit(1.0))
     var hub: DataFrame = null
@@ -187,7 +141,7 @@ object Graph {
       val mx = raw.agg(max(col(vc)).as("_mx"))
       raw.crossJoin(broadcast(mx))
         .select(col(idc).as("id"),
-          round(col(vc) / col("_mx"), roundTo).as(vc))
+          round(col(vc) / col("_mx"), Digits).as(vc))
     }
     for (_ <- 1 to iterations) {
       hub = normalized(
@@ -251,6 +205,32 @@ object Graph {
     * `max_by(label, (n, −label))` hash-aggregate — a sort-free argmax
     * with one (n, label) pair of state per node, replacing a rank window
     * that sorted every node's neighbor-label list. */
+  def labelPropagation(
+      edges: DataFrame,
+      srcCol: String,
+      dstCol: String,
+      iterations: Int = 4): DataFrame = {
+    require(iterations >= 1, "iterations must be >= 1")
+    val edgeP = Rounds.staticSide(
+      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")), "src")
+    val labels = edgeP.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id"))
+    Rounds.run(labels, iterations) { labels =>
+      edgeP
+        .join(labels, col("src") === col("id"))
+        .groupBy(col("dst"), col("label"))
+        .agg(count(lit(1)).as("n"))
+        // argmax by (count DESC, label ASC): lexicographic struct max on
+        // (n, -label) — a sort-free hash-aggregate whose state is one
+        // (n, label) pair per node, where the rank-window formulation it
+        // replaces sorted every node's neighbor-label list
+        .groupBy(col("dst"))
+        .agg(max_by(col("label"),
+          struct(col("n"), (-col("label")).as("nl"))).as("label"))
+        .select(col("dst").as("id"), col("label"))
+    }
+  }
+
   /** Multi-source BFS: unit-weight shortest hop count from any seed,
     * capped at `maxHops` rounds (nodes farther than the cap are absent
     * from the output — the fixed-frontier form production link-graphs
@@ -273,47 +253,43 @@ object Graph {
       idCol: String,
       maxHops: Int = 4): DataFrame = {
     require(maxHops >= 1, "maxHops must be >= 1")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val sess = edges.sparkSession
-    val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    val edgeP =
-      try {
-        sess.conf.set("spark.sql.adaptive.enabled", "false")
-        e.repartition(col("src")).sortWithinPartitions("src")
-          .localCheckpoint(true)
-      } finally sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
-    var dist = seeds.select(col(idCol).as("id")).distinct()
+    val edgeP = Rounds.staticSide(
+      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")), "src")
+    val dist = seeds.select(col(idCol).as("id")).distinct()
       .withColumn("dist", lit(0L))
-    for (i <- 1 to maxHops) {
+    Rounds.run(dist, maxHops, rereads = true) { dist =>
       val expanded = edgeP.join(dist, col("src") === col("id"))
         .select(col("dst").as("id"), (col("dist") + 1L).as("dist"))
-      dist = dist.unionByName(expanded)
+      dist.unionByName(expanded)
         .groupBy("id").agg(min(col("dist")).as("dist"))
-      if (i < maxHops) dist = dist.localCheckpoint(false)
     }
-    dist
   }
 
-  /** One-row triangle scorecard over an undirected edge list (either
-    * direction, self-loops and duplicates tolerated): node/edge/wedge
-    * counts, exact triangle count, and the global clustering coefficient
-    * 3·triangles / wedges. Triangle enumeration uses DEGREE-ORDERED
-    * orientation (Ortmann & Brandes / the classic compact-forward trick):
-    * each edge points from its lower-(degree, id) endpoint to the higher,
-    * so wedge expansion fans out from the LOW-degree side — a star node
-    * of degree d contributes 0 wedges as a center instead of d², which is
-    * the difference between surviving a power-law graph at 100 TB and a
-    * quadratic blowup on the hottest key. Each triangle is counted
-    * exactly once (its rank-minimal wedge), closed by one semi-join back
-    * against the oriented edges. */
-  def triangleStats(
-      edges: DataFrame,
-      aCol: String,
-      bCol: String): DataFrame = {
-    val und = edges
+  /** Each undirected edge once, as (a, b) with a < b: either input
+    * direction, self-loops and duplicates tolerated. */
+  private def undirected(edges: DataFrame, aCol: String, bCol: String): DataFrame =
+    edges
       .select(least(col(aCol), col(bCol)).as("a"),
         greatest(col(aCol), col(bCol)).as("b"))
       .filter(col("a") =!= col("b")).distinct()
+
+  /** The triangle enumeration [[triangleStats]] and [[localClustering]]
+    * share, by DEGREE-ORDERED orientation (Ortmann & Brandes / the classic
+    * compact-forward trick): each edge points from its lower-(degree, id)
+    * endpoint to the higher, so wedge expansion fans out from the
+    * LOW-degree side — a star node of degree d contributes 0 wedges as a
+    * center instead of d², which is the difference between surviving a
+    * power-law graph at 100 TB and a quadratic blowup on the hottest key.
+    * Each triangle is generated exactly once, at its rank-minimal wedge
+    * (the Suri–Vassilvitskii bound), and closed by one semi-join back
+    * against the oriented edges. Returns the undirected edges (a, b), the
+    * node degrees (n, deg) and one (lo, h1, h2) row per triangle. */
+  private def triangles(
+      edges: DataFrame,
+      aCol: String,
+      bCol: String): (DataFrame, DataFrame, DataFrame) = {
+    // und and orient are each read three or more times below
+    val und = undirected(edges, aCol, bCol).localCheckpoint()
     val deg = und.select(col("a").as("n"))
       .unionByName(und.select(col("b").as("n")))
       .groupBy("n").agg(count(lit(1)).as("deg"))
@@ -326,16 +302,29 @@ object Graph {
       when(aFirst, col("a")).otherwise(col("b")).as("lo"),
       when(aFirst, col("b")).otherwise(col("a")).as("hi"),
       when(aFirst, col("db")).otherwise(col("da")).as("dhi"))
+      .localCheckpoint()
     val e1 = orient.select(col("lo"), col("hi").as("h1"), col("dhi").as("dh1"))
     val e2 = orient.select(col("lo"), col("hi").as("h2"), col("dhi").as("dh2"))
-    val wedges = e1.join(e2, Seq("lo")).filter(
-      col("dh1") < col("dh2") ||
-        (col("dh1") === col("dh2") && col("h1") < col("h2")))
     // the closing edge between h1 and h2 is oriented (h1 → h2): the wedge
     // condition already ordered them by the orientation rank
-    val closed = wedges.join(
-      orient.select(col("lo").as("h1"), col("hi").as("h2")),
-      Seq("h1", "h2"), "left_semi")
+    val closed = e1.join(e2, Seq("lo")).filter(
+        col("dh1") < col("dh2") ||
+          (col("dh1") === col("dh2") && col("h1") < col("h2")))
+      .join(orient.select(col("lo").as("h1"), col("hi").as("h2")),
+        Seq("h1", "h2"), "left_semi")
+    (und, deg, closed)
+  }
+
+  /** One-row triangle scorecard over an undirected edge list (either
+    * direction, self-loops and duplicates tolerated): node/edge/wedge
+    * counts, exact triangle count (the degree-oriented enumeration of
+    * [[triangles]]), and the global clustering coefficient
+    * 3·triangles / wedges. */
+  def triangleStats(
+      edges: DataFrame,
+      aCol: String,
+      bCol: String): DataFrame = {
+    val (und, deg, closed) = triangles(edges, aCol, bCol)
     val tri = closed.agg(count(lit(1)).as("n_triangles"))
     val nodeStats = deg.agg(count(lit(1)).as("n_nodes"),
       sum((col("deg") * (col("deg") - 1) / 2).cast("long")).as("n_wedges"))
@@ -355,40 +344,15 @@ object Graph {
     * have no defined coefficient → null lcc, zero-triangle nodes keep
     * their row with lcc = 0.
     *
-    * Scale shape: identical to [[triangleStats]] — degree-oriented wedge
-    * join (each wedge generated ONCE, at its lowest-rank vertex, the
-    * Suri–Vassilvitskii bound) closed by a semi... here a plain equi-join
-    * so each triangle can credit its THREE corners via one 3-way explode,
-    * then a node-keyed hash-aggregate. */
+    * Scale shape: identical to [[triangleStats]] — the degree-oriented
+    * wedge join closed by the same left-semi join against the oriented
+    * edges; each triangle then credits its THREE corners via one 3-way
+    * explode, and a node-keyed hash-aggregate counts them. */
   def localClustering(
       edges: DataFrame,
       aCol: String,
       bCol: String): DataFrame = {
-    val und = edges
-      .select(least(col(aCol), col(bCol)).as("a"),
-        greatest(col(aCol), col(bCol)).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-      .localCheckpoint()
-    val deg = und.select(col("a").as("n"))
-      .unionByName(und.select(col("b").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("deg"))
-    val withDeg = und
-      .join(deg.select(col("n").as("a"), col("deg").as("da")), "a")
-      .join(deg.select(col("n").as("b"), col("deg").as("db")), "b")
-    val aFirst = col("da") < col("db") ||
-      (col("da") === col("db") && col("a") < col("b"))
-    val orient = withDeg.select(
-      when(aFirst, col("a")).otherwise(col("b")).as("lo"),
-      when(aFirst, col("b")).otherwise(col("a")).as("hi"),
-      when(aFirst, col("db")).otherwise(col("da")).as("dhi"))
-      .localCheckpoint()
-    val e1 = orient.select(col("lo"), col("hi").as("h1"), col("dhi").as("dh1"))
-    val e2 = orient.select(col("lo"), col("hi").as("h2"), col("dhi").as("dh2"))
-    val closed = e1.join(e2, Seq("lo")).filter(
-        col("dh1") < col("dh2") ||
-          (col("dh1") === col("dh2") && col("h1") < col("h2")))
-      .join(orient.select(col("lo").as("h1"), col("hi").as("h2")),
-        Seq("h1", "h2"), "left_semi")
+    val (_, deg, closed) = triangles(edges, aCol, bCol)
     val triPerNode = closed
       .select(explode(array(col("lo"), col("h1"), col("h2"))).as("n"))
       .groupBy("n").agg(count(lit(1)).as("n_tri"))
@@ -412,7 +376,7 @@ object Graph {
     * and two semi-joins of the edge list against the surviving-node set —
     * all keyed on node id; the edge list shrinks monotonically. The edge
     * table is referenced three times per round, so it is lazily
-    * checkpointed each round (same lineage-doubling hazard as
+    * checkpointed between rounds (same lineage-doubling hazard as
     * [[bfsDistances]]). */
   def kCore(
       edges: DataFrame,
@@ -422,90 +386,15 @@ object Graph {
       rounds: Int = 3): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(rounds >= 1, "rounds must be >= 1")
-    val und = edges
-      .select(least(col(aCol), col(bCol)).as("a"),
-        greatest(col(aCol), col(bCol)).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-    var sym = und.select(col("a").as("src"), col("b").as("dst"))
+    val und = undirected(edges, aCol, bCol)
+    val sym = und.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
-    for (_ <- 1 to rounds) {
+    Rounds.run(sym, rounds, rereads = true) { sym =>
       val keep = sym.groupBy("src").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select("src")
-      sym = sym
+      sym
         .join(keep, Seq("src"), "left_semi")
         .join(keep.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi")
-        .localCheckpoint(false)
-    }
-    sym.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-  }
-
-  /** `checkpointEvery`: truncate the logical plan every k rounds with a
-    * lazy localCheckpoint (the [[pageRank]] knob) — without it plan depth
-    * grows linearly with `iterations` and analysis cost superlinearly
-    * past ~10 rounds. `probeEvery` > 0 adds a stability probe every k
-    * rounds: synchronous LPA is a deterministic function of the previous
-    * labeling, so an unchanged round is a FIXPOINT and every later round
-    * is identical — stopping early returns exactly the fixed-iteration
-    * result (the [[graft.ops.Dedup.connectedComponents]] convergence
-    * posture; LPA labels are not monotone, so the probe compares the
-    * labelings directly instead of their sum). Default 0 keeps the
-    * fixed-iteration contract bit-for-bit. */
-  def labelPropagation(
-      edges: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      iterations: Int = 4,
-      checkpointEvery: Int = 8,
-      probeEvery: Int = 0): DataFrame = {
-    require(iterations >= 1, "iterations must be >= 1")
-    require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val sess = edges.sparkSession
-    val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    val edgeP =
-      try {
-        sess.conf.set("spark.sql.adaptive.enabled", "false")
-        e.repartition(col("src")).sortWithinPartitions("src")
-          .localCheckpoint(true)
-      } finally sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
-    var labels = edgeP.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-    var i = 0
-    var converged = false
-    while (!converged && i < iterations) {
-      i += 1
-      val prev = labels
-      val next = edgeP
-        .join(prev, col("src") === col("id"))
-        .groupBy(col("dst"), col("label"))
-        .agg(count(lit(1)).as("n"))
-        // argmax by (count DESC, label ASC): lexicographic struct max on
-        // (n, -label) — a sort-free hash-aggregate whose state is one
-        // (n, label) pair per node, where the rank-window formulation it
-        // replaces sorted every node's neighbor-label list
-        .groupBy(col("dst"))
-        .agg(max_by(col("label"),
-          struct(col("n"), (-col("label")).as("nl"))).as("label"))
-        .select(col("dst").as("id"), col("label"))
-      val probing = probeEvery > 0 && i % probeEvery == 0 && i < iterations
-      // a probe round materializes the labels once (lazy localCheckpoint)
-      // so the probe job and the next round share the computation instead
-      // of each re-deriving the same lineage
-      labels =
-        if ((i % checkpointEvery == 0 || probing) && i < iterations)
-          next.localCheckpoint(false)
-        else next
-      if (probing)
-        // FULL-outer: a node present in only one of the two labelings is
-        // itself a change — an inner join would hide node-set drift (on a
-        // non-symmetrized edge list round 1 shrinks the label table) and
-        // declare a false fixpoint
-        converged = labels
-          .join(prev.withColumnRenamed("label", "_prev"), Seq("id"), "full")
-          .where(col("label").isNull || col("_prev").isNull ||
-            col("label") =!= col("_prev"))
-          .isEmpty
-    }
-    labels
+    }.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
   }
 }

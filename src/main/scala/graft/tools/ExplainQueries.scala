@@ -5,9 +5,11 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Writes one `<query>.txt` per requested query containing the
-  * `.explain("formatted")` output (the optimization-round plan artifact)
-  * plus the post-execution (final AQE) physical plan — the two views the
-  * judge checks plan claims against.
+  * `.explain("formatted")` output (the plan before execution) plus the
+  * physical plan that ran: the query is collected through the SAME
+  * Dataset, so its adaptive plan finalizes with the runtime re-planning
+  * in place (a side write would run a separate QueryExecution and leave
+  * this one's plan initial).
   *
   * Usage: runMain graft.tools.ExplainQueries <outDir> <q1,q2,...> [sfDir]
   * A query argument matches by prefix (q63 matches q63_canonical).
@@ -27,7 +29,7 @@ object ExplainQueries {
           val df = fn(spark, sfDir)
           val formatted = df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
-          df.write.format("noop").mode("overwrite").save()
+          df.collect()
           val finalPlan = df.queryExecution.executedPlan match {
             case a: AdaptiveSparkPlanExec => a.executedPlan.toString
             case p => p.toString

@@ -15,12 +15,23 @@ class PlanShapeSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
+  // runs the query through a noop write, then returns THIS Dataset's
+  // physical plan: the write is a separate QueryExecution, so an adaptive
+  // plan comes back as planned, before execution (no query stages, no
+  // runtime re-planning). Locks on what ran use `ran` + `deepCollect`.
   private def executed(df: DataFrame): SparkPlan = {
-    df.write.format("noop").mode("overwrite").save() // finalize AQE
+    df.write.format("noop").mode("overwrite").save()
     df.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.executedPlan
       case p => p
     }
+  }
+
+  // the plan that ran: collected through THIS QueryExecution, so an
+  // adaptive plan finalizes with its query stages and runtime re-planning
+  private def ran(df: DataFrame): SparkPlan = {
+    df.collect()
+    df.queryExecution.executedPlan
   }
 
   private def collectAll[T](p: SparkPlan)(pf: PartialFunction[SparkPlan, T]): Seq[T] =
@@ -109,17 +120,12 @@ class PlanShapeSpec extends SparkSpec {
         write.getOrElse(fail(s"$q: no write execution was reported"))
       } finally spark.listenerManager.unregister(listener)
     }
-    // the plan AQE ran, codegen stages included
-    def ran(q: String): SparkPlan = {
-      val df = SparkEntry.queries(q)(spark, dir)
-      df.collect()
-      df.queryExecution.executedPlan
-    }
+    def ranQ(q: String): SparkPlan = ran(SparkEntry.queries(q)(spark, dir))
     val limit = spark.conf.get("spark.sql.codegen.hugeMethodLimit").toInt
     val plans = Seq(
-      "q01_e1_flagship" -> ran("q01_e1_flagship"),
+      "q01_e1_flagship" -> ranQ("q01_e1_flagship"),
       "q11_part_write" -> writePlan("q11_part_write"),
-      "q25_e2_pipeline" -> ran("q25_e2_pipeline"))
+      "q25_e2_pipeline" -> ranQ("q25_e2_pipeline"))
     for ((q, plan) <- plans) {
       val all = deepCollect(plan) { case n => n }
       // codegen first: a Column parse cascade copied into a pushed-down
@@ -591,21 +597,21 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("pagerank: iteration body reads the checkpointed edges — no fact re-scan") {
-    val plan = executed(SparkEntry.queries("q133_pagerank")(spark, dir))
+    val plan = ran(SparkEntry.queries("q133_pagerank")(spark, dir))
     // the scale property: the orders⋈lineitem edge derivation ran ONCE
     // (inside the eager checkpoint); the 5-iteration body must contain
     // zero parquet scans and only the per-round rank exchanges
-    val fileScans = collectAll(plan) {
+    val fileScans = deepCollect(plan) {
       case s: org.apache.spark.sql.execution.FileSourceScanExec => s
     }
     assert(fileScans.isEmpty, s"iterations must not re-scan parquet:\n$plan")
-    val rddScans = collectAll(plan) {
+    val rddScans = deepCollect(plan) {
       case r: org.apache.spark.sql.execution.RDDScanExec => r
     }
     assert(rddScans.nonEmpty, s"expected the checkpointed edge scan:\n$plan")
     // one dst-aggregate exchange per iteration (5) + nothing else: the
     // preserved hashpartitioning(src) means the edge side never moves
-    val shuffles = collectAll(plan) { case s: ShuffleExchangeExec => s }
+    val shuffles = deepCollect(plan) { case s: ShuffleExchangeExec => s }
     assert(shuffles.size <= 5, s"unexpected shuffles (${shuffles.size}):\n$plan")
   }
 
@@ -650,15 +656,15 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("bfs: iteration body reads the checkpointed edges once — no re-scan per round") {
-    val plan = executed(SparkEntry.queries("q147_bfs_distances")(spark, dir))
-    val fileScans = collectAll(plan) {
+    val plan = ran(SparkEntry.queries("q147_bfs_distances")(spark, dir))
+    val fileScans = deepCollect(plan) {
       case s: org.apache.spark.sql.execution.FileSourceScanExec => s
     }
     // one parquet scan is allowed: the SEED selection (supplier table);
     // the edge derivation (orders⋈lineitem) must live inside the eager
     // checkpoint, not re-derive per round
     assert(fileScans.size <= 1, s"iterations must not re-scan the fact tables:\n$plan")
-    val rddScans = collectAll(plan) {
+    val rddScans = deepCollect(plan) {
       case r: org.apache.spark.sql.execution.RDDScanExec => r
     }
     assert(rddScans.nonEmpty, s"expected the checkpointed edge scan:\n$plan")

@@ -187,7 +187,7 @@ class DedupSpec extends SparkSpec {
     // {10,11,12} (a triangle), {20,21}
     val edges = Seq((2L, 1L), (2L, 3L), (3L, 4L), (5L, 4L),
       (10L, 11L), (11L, 12L), (12L, 10L), (21L, 20L)).toDF("a", "b")
-    val labels = Dedup.connectedComponents(edges, "a", "b")
+    val labels = MinLabelComponents.connectedComponents(edges, "a", "b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L))
@@ -197,27 +197,6 @@ class DedupSpec extends SparkSpec {
       1L -> ((5L, "1;2;3;4;5")),
       10L -> ((3L, "10;11;12")),
       20L -> ((2L, "20;21"))))
-  }
-
-  test("connectedComponents: reliable-checkpoint path yields identical labels") {
-    // the durability mode a real cluster needs (localCheckpoint lineage
-    // dies with an executor): reliable checkpoints every round must not
-    // change a single label
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
-    spark.sparkContext.setCheckpointDir(ckpt)
-    try {
-      val edges = Seq((2L, 1L), (2L, 3L), (3L, 4L), (5L, 4L),
-        (10L, 11L), (11L, 12L), (12L, 10L), (21L, 20L)).toDF("a", "b")
-      val default = Dedup.connectedComponents(edges, "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val reliable = Dedup.connectedComponents(edges, "a", "b", reliableEvery = 1)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(reliable == default)
-      // the checkpoint dir was actually used (RDD checkpoint files exist)
-      val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt))
-        .filter(p => java.nio.file.Files.isRegularFile(p)).count()
-      assert(wrote > 0, "reliable checkpoint wrote nothing")
-    } finally spark.sparkContext.setCheckpointDir(null)
   }
 
   test("decontaminate: docs sharing a 4-gram with the bench set are removed") {
@@ -314,6 +293,21 @@ class DedupSpec extends SparkSpec {
     val got = Dedup.fuzzyPairsSymDel(recs, "id", "name", "blk", maxDist = 0)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == Set((1L, 2L)))
+  }
+
+  test("fuzzyPairsSymDel: a padded shuffle.partitions value (\" 8\") is read as 8") {
+    // SQLConf trims integer confs, so " 8" is a legal setting; the
+    // explode stage's partition count must come from the parsed value
+    val key = "spark.sql.shuffle.partitions"
+    val was = spark.conf.get(key)
+    spark.conf.set(key, " 8")
+    try {
+      val recs = Seq((1L, "abc", "A"), (2L, "abd", "A"), (3L, "xyz", "A"))
+        .toDF("id", "name", "blk")
+      val got = Dedup.fuzzyPairsSymDel(recs, "id", "name", "blk", maxDist = 1)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got == Set((1L, 2L)))
+    } finally spark.conf.set(key, was)
   }
 
   test("canonicalPerCluster: max quality wins, ties break to min id") {
@@ -642,7 +636,7 @@ class DedupSpec extends SparkSpec {
   test("dedupWeights: cluster members share 1/size, unclustered docs weigh 1.0") {
     val ids = Seq(1L, 2L, 3L, 4L, 5L).toDF("id")
     // clusters {1,2,3} and {4,5} as raw edges
-    val labels = Dedup.connectedComponents(
+    val labels = Dedup.connectedComponentsStar(
       Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("a", "b"), "a", "b")
     val out = Dedup.dedupWeights(ids, labels, "id")
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2))))
@@ -861,10 +855,10 @@ class DedupSpec extends SparkSpec {
     // algorithm were O(diameter) it would hit maxIter; both must stay
     // within a small multiple of log2(n).
     val edges = (0L until 1024L).map(i => (i, i + 1)).toDF("a", "b")
-    val ml = Dedup.connectedComponents(edges, "a", "b",
+    val ml = MinLabelComponents.connectedComponents(edges, "a", "b",
         maxIter = 50, probeEvery = 1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val mlRounds = Dedup.ccLastRounds
+    val mlRounds = MinLabelComponents.lastRounds
     assert(ml.size == 1025 && ml.values.forall(_ == 0L))
     // pointer jumping doubles label reach per round: O(log d), NOT
     // O(d) — the property this fixture pins (12 propagation rounds +
@@ -890,8 +884,8 @@ class DedupSpec extends SparkSpec {
     val want = Map(3L -> 3L, 5L -> 3L, 9L -> 3L, 20L -> 20L, 21L -> 20L,
       40L -> 40L)
     assert(got == want)
-    // same answer as the production implementation
-    val ml = Dedup.connectedComponents(edges, "a", "b")
+    // same answer as the min-label reference
+    val ml = MinLabelComponents.connectedComponents(edges, "a", "b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(ml == want)
   }

@@ -58,57 +58,53 @@ class GraphSpec extends SparkSpec {
     assert(b.forall(n => b.contains(run1(n))), run1.toString)
   }
 
-  test("labelPropagation: checkpointEvery bounds plan depth at iterations=20; result unchanged") {
+  test("labelPropagation: the every-8 truncation bounds plan depth at iterations=20; labels are the converged result") {
     val g = sym((1L, 2L), (2L, 3L), (1L, 3L), (10L, 11L), (11L, 12L), (10L, 12L))
-    // plan-size probe: count of nodes in the analyzed logical plan — with
-    // per-2-round truncation the depth must stay bounded (a checkpointed
-    // frame restarts the lineage at a leaf) instead of growing with the
-    // 20 rounds
-    val deep = Graph.labelPropagation(g, "src", "dst",
-      iterations = 20, checkpointEvery = 2)
+    // plan-size probe: count of nodes in the analyzed logical plan — the
+    // lazy checkpoints after rounds 8 and 16 restart the lineage at a
+    // leaf, so 20 rounds carry only 4 rounds of plan, like a 4-round run
+    val deep = Graph.labelPropagation(g, "src", "dst", iterations = 20)
     val planNodes = deep.queryExecution.analyzed.collect { case p => p }.size
-    val two = Graph.labelPropagation(g, "src", "dst",
-      iterations = 2, checkpointEvery = 100)
-    val twoNodes = two.queryExecution.analyzed.collect { case p => p }.size
-    // ≤ 2 un-truncated rounds of lineage on top of the last checkpoint
-    assert(planNodes <= twoNodes + 4,
+    val four = Graph.labelPropagation(g, "src", "dst", iterations = 4)
+    val fourNodes = four.queryExecution.analyzed.collect { case p => p }.size
+    assert(planNodes <= fourNodes,
       s"plan depth must stay bounded: 20-round plan has $planNodes nodes " +
-        s"vs $twoNodes for a 2-round plan")
-    // checkpoint transparency: same labels as the untruncated run
-    val plain = Graph.labelPropagation(g, "src", "dst",
-      iterations = 6, checkpointEvery = 100)
+        s"vs $fourNodes for a 4-round plan")
+    // two triangles converge within 2 synchronous rounds to their
+    // smallest ids; the truncated 20-round run must land there too
+    val converged = Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
+      10L -> 10L, 11L -> 10L, 12L -> 10L)
+    val got = deep.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == converged, got.toString)
+    val plain = Graph.labelPropagation(g, "src", "dst", iterations = 6)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val chk = Graph.labelPropagation(g, "src", "dst",
-      iterations = 6, checkpointEvery = 2)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(plain == chk, s"$plain vs $chk")
+    assert(plain == converged, plain.toString)
   }
 
-  test("labelPropagation: stability probe stops at the fixpoint with the fixed-iteration result") {
-    // two triangles converge in ≤2 synchronous rounds; a fixpoint round is
-    // final (deterministic update), so early stop ≡ running all 10
-    val g = sym((1L, 2L), (2L, 3L), (1L, 3L), (10L, 11L), (11L, 12L), (10L, 12L))
-    val full = Graph.labelPropagation(g, "src", "dst", iterations = 10)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val probed = Graph.labelPropagation(g, "src", "dst",
-      iterations = 10, probeEvery = 1)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(full == probed, s"$full vs $probed")
-  }
-
-  test("labelPropagation: probe sees node-set drift on an asymmetric edge list (no false fixpoint)") {
-    // DIRECTED chain 1→2→3→4 (not symmetrized): labels0 covers the src
-    // set {1,2,3}; round 1 emits per-dst labels {2,3,4}. An inner-join
-    // probe saw only {2,3} (both rounds' intersection) and could declare
-    // a false fixpoint while updates were still flowing. The full-outer
-    // probe must keep iterating and land on the fixed-iteration result.
-    val g = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
-    val full = Graph.labelPropagation(g, "src", "dst", iterations = 6)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val probed = Graph.labelPropagation(g, "src", "dst",
-      iterations = 6, probeEvery = 1)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(full == probed, s"$full vs $probed")
+  test("Rounds.staticSide: hash-partitioned on the key under AQE; the AQE setting survives success and failure") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    val key = "spark.sql.adaptive.enabled"
+    val was = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try {
+      val e = sym((1L, 2L), (2L, 3L), (3L, 4L))
+      val side = Rounds.staticSide(e, "src")
+      // the partitioning the rounds' joins rely on to leave this side in place
+      side.queryExecution.executedPlan.outputPartitioning match {
+        case h: HashPartitioning =>
+          assert(h.expressions.collect { case a: Attribute => a.name } == Seq("src"),
+            h.toString)
+        case p => fail(s"expected hashpartitioning(src), got $p")
+      }
+      assert(side.count() == 6)
+      assert(spark.conf.get(key) == "true", "AQE setting not restored after success")
+      intercept[Exception] {
+        Rounds.staticSide(spark.range(4)
+          .select(col("id").as("src"), assert_true(col("id") < 2).as("chk")), "src")
+      }
+      assert(spark.conf.get(key) == "true", "AQE setting not restored after a failure")
+    } finally spark.conf.set(key, was)
   }
 
   test("hits: hubs and authorities separate on a directed bipartite graph") {

@@ -115,7 +115,7 @@ class GraphXParitySpec extends SparkSpec {
       (rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
       .filter(p => p._1 != p._2).distinct
 
-    val ours = Dedup.connectedComponents(pairs.toDF("a", "b"), "a", "b")
+    val ours = MinLabelComponents.connectedComponents(pairs.toDF("a", "b"), "a", "b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
     val xg = XGraph.fromEdges(

@@ -665,7 +665,7 @@ class TextAnalysisSpec extends SparkSpec {
       (i, if (i <= 10) text else s"unique document number $i with words " * 3))
       .toDF("doc_id", "text")
     val d = docs.select(col("doc_id"), TextAnalysis.words(col("text")).as("toks"))
-    val labels = Dedup.connectedComponents(
+    val labels = Dedup.connectedComponentsStar(
       Dedup.simhashPairs(d, "doc_id", col("toks"), maxDist = 6), "id_a", "id_b")
     val splits = docs.select(col("doc_id"))
       .join(labels, docs("doc_id") === labels("id"), "left")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
 
-import graft.ops.{Aggregates, Cleansing, Dedup, MergeUpdate, Reshape}
+import graft.ops.{Aggregates, Cleansing, Dedup, MergeUpdate, MinLabelComponents, Reshape}
 
 /** Property-based invariants (SURVEY.md §5.3): unpivot row-count
   * conservation, aggregate sum preservation + idempotence, merge-update
@@ -172,7 +172,7 @@ object InvariantProps extends Properties("graft.invariants") {
     } yield (a, b))) { edges =>
       edges.isEmpty || {
         import spark.implicits._
-        val got = Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b")
+        val got = MinLabelComponents.connectedComponents(edges.toDF("a", "b"), "a", "b")
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         got == ccReference(edges)
       }
@@ -206,8 +206,8 @@ object InvariantProps extends Properties("graft.invariants") {
           // log2(96) ≈ 6.6; 12 rounds is comfortable for pointer jumping
           // (plus the equal-sum confirmation probe) and impossible for
           // naive O(d) propagation at n > 12
-          Dedup.connectedComponents(pathEdges(n).toDF("a", "b"), "a", "b",
-              maxIter = 12)
+          MinLabelComponents.connectedComponents(pathEdges(n).toDF("a", "b"),
+              "a", "b", maxIter = 12)
             .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         }
         (0L until n.toLong).forall(i => labels.get(i).contains(0L)) &&
@@ -222,8 +222,8 @@ object InvariantProps extends Properties("graft.invariants") {
       warnCcCache.getOrElseUpdate(n, {
         import spark.implicits._
         val (_, err) = captureStderr {
-          Dedup.connectedComponents(pathEdges(n).toDF("a", "b"), "a", "b",
-              maxIter = 1)
+          MinLabelComponents.connectedComponents(pathEdges(n).toDF("a", "b"),
+              "a", "b", maxIter = 1)
             .collect()
         }
         err.contains("NOT converged")
