@@ -21,8 +21,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * generated static call keeps the surrounding pipeline inside its
   * WholeStageCodegen span; the DP itself is two tight O(maxLen·maxPiece)
   * array loops. The DuckDB oracle replays the identical integer DP as a
-  * generated CTE chain from the same vocab constants
-  * ([[graft.OraclesExt.unigramViterbi]]), so the engines cannot drift.
+  * generated CTE chain from the same vocab constants (the q306 oracle in
+  * `graft.queries.CorpusQueries`), so the engines cannot drift.
   *
   * Null input → null. Empty string → (0, 0, ""). Characters outside the
   * vocabulary fall to [[UnigramViterbi.unkCostPerChar]] per char, so

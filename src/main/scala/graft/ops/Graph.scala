@@ -110,7 +110,9 @@ object Graph {
     * has authority 0, a pure sink hub 0.
     *
     * Scale shape: TWO static sides (the edge list by dst for the hub
-    * step, by src for the authority step) — each round's joins then
+    * step, by src for the authority step; the second is re-partitioned
+    * from the first's checkpoint, so the edge list is derived once) —
+    * each round's joins then
     * shuffle only the (id, score) tables, and the score aggregates are
     * map-side combined. The normalizing max is a 1-row broadcast
     * re-entry (the TF-IDF corpus-stats pattern), never a driver collect.
@@ -130,7 +132,8 @@ object Graph {
     require(iterations >= 1, "iterations must be >= 1")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()
     val eByDst = Rounds.staticSide(e, "dst")
-    val eBySrc = Rounds.staticSide(e, "src")
+    // from the checkpoint, so the caller's edge frame is evaluated once
+    val eBySrc = Rounds.staticSide(eByDst, "src")
     var auth = eByDst.select(col("dst").as("id")).distinct()
       .withColumn("a", lit(1.0))
     var hub: DataFrame = null

@@ -57,7 +57,7 @@ object Hashing {
 
   /** The i-th universal-hash permutation of an already-mod-P hash value:
     * `(a_i * h + b_i) mod P`. Constants are small odd affine coefficients;
-    * mirrored verbatim in [[graft.OraclesExt]]. */
+    * mirrored verbatim in [[graft.Oracles]]. */
   def permute(i: Int, h: Column): Column =
     (lit(37L * i + 11L) * h + lit(101L * i + 7L)) % P
 

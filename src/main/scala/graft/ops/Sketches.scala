@@ -237,8 +237,8 @@ object Sketches {
       .localCheckpoint()
     val sk = TopK.perKey(d, Seq("g"), Seq(("h", true)), k).localCheckpoint()
     val gs = sk.select("g").distinct()
-    // cardinality guard (the Lookup.mapWithDefault limit-probe posture):
-    // one bounded job over the sketch spine, never a full count of data
+    // cardinality guard: a LIMIT n+1 probe is one bounded job over the
+    // sketch spine, never a full count of data
     val nGroups = gs.limit(maxGroups + 1).count()
     require(nGroups <= maxGroups,
       s"kmvSetOps: > $maxGroups groups — the all-pairs grid is " +

@@ -1,6 +1,6 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.fixtures.TimesheetFixture
@@ -30,13 +30,17 @@ object TimesheetPipeline {
     * emitted branch, which at scale both multiplies CPU and blows up
     * codegen). Only the per-cell hour cleansing (P5/P6) runs post-melt.
     */
-  def cleansedRecords(spark: SparkSession, sfDir: String): DataFrame = {
+  def cleansedRecords(spark: SparkSession, sfDir: String): DataFrame =
+    cleansed(spark, sfDir, Cleansing.surname(col("autore")))
+
+  /** [[cleansedRecords]] with the given surname column (P4 or P4-v1). */
+  private def cleansed(spark: SparkSession, sfDir: String, surname: Column): DataFrame = {
     val wide = TimesheetFixture.wide(spark, sfDir)
     val parsed = wide
       .filter(Cleansing.hasWeekRange(col("weekrange")))                 // P1
       .withColumn("week_start", Cleansing.weekStart(col("weekrange")))  // P2
       .filter(col("week_start").isNotNull)
-      .withColumn("surname", Cleansing.surname(col("autore")))          // P4
+      .withColumn("surname", surname)                                   // P4
     val melted = Reshape.meltWeek(
       parsed, idCols = Seq("rid", "week_start", "surname", "commessa"))
     melted
@@ -66,19 +70,7 @@ object TimesheetPipeline {
     * reference; here it returns the aggregate (the writer is exercised
     * by q11). */
   def pipelineV1(spark: SparkSession, sfDir: String): DataFrame = {
-    val wide = TimesheetFixture.wide(spark, sfDir)
-    val parsed = wide
-      .filter(Cleansing.hasWeekRange(col("weekrange")))
-      .withColumn("week_start", Cleansing.weekStart(col("weekrange")))
-      .filter(col("week_start").isNotNull)
-      .withColumn("surname", Cleansing.surnameV1(col("autore")))
-    val melted = Reshape.meltWeek(
-      parsed, idCols = Seq("rid", "week_start", "surname", "commessa"))
-    val records = melted
-      .withColumn("ore", Cleansing.cleanHours(col("ore_raw")))
-      .filter(Cleansing.keepHours(col("ore_raw"), col("ore")))
-      .withColumn("data", Reshape.dayDate(col("week_start"), col("doff")))
-      .select("data", "commessa", "surname", "ore")
+    val records = cleansed(spark, sfDir, Cleansing.surnameV1(col("autore")))
     Aggregates.sumByKeys(records, Seq("data", "commessa", "surname"), "ore", "ore")
       .orderBy("data", "commessa", "surname")
   }

@@ -126,6 +126,18 @@ class GraphSpec extends SparkSpec {
     assert(got == again)
   }
 
+  test("hits: the input edge list is evaluated once per call") {
+    // both static sides come from one derivation of the edge list: a UDF
+    // over the input counts how often each row is evaluated
+    val evals = spark.sparkContext.longAccumulator("hits.edge_evals")
+    val touch = udf { (x: Long) => evals.add(1L); x }.asNondeterministic()
+    val g = Seq((1L, 10L), (1L, 11L), (2L, 10L), (3L, 11L), (3L, 12L))
+      .toDF("src", "dst")
+      .select(touch(col("src")).as("src"), col("dst"))
+    Graph.hits(g, "src", "dst", iterations = 3).collect()
+    assert(evals.value == 5L, s"5 edges evaluated ${evals.value} times")
+  }
+
   test("bfsDistances: path graph distances, hop cap truncates the frontier") {
     // line 0-1-2-3-4-5, seed at 0
     val line = sym((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
